@@ -61,6 +61,16 @@ object Components {
     * build side. Override with `spark.graft.cc.localEdgeLimit`
     * (0 disables the local finish; raise it on drivers with room, the
     * collect is packed primitive arrays, 16 bytes/edge).
+    *
+    * Driver-heap cost at the 2M default: the packed collect plus its
+    * merged copy are ~64 MB, and the union-find's sorted id array adds
+    * up to 32 MB. The `(id, component)` result is the larger part: it
+    * is built as a `java.util.ArrayList` of boxed `Row`s (~75 bytes per
+    * node) and fed back through `createDataFrame` as a `LocalRelation`
+    * that holds its own converted copy (~80 bytes per node) for as
+    * long as the returned DataFrame's plan lives. A graph of 2M edge
+    * rows has up to 2M nodes, so expect a peak of roughly 0.4 GB of
+    * driver heap; size the limit to the driver, not to the cluster.
     */
   private val LocalEdgeLimitDefault = 2000000L
 

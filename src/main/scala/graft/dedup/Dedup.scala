@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -8,10 +8,14 @@ import org.apache.spark.sql.expressions.Window
   * n-gram Jaccard, embedding-cosine near-dup.
   *
   * Scale design: everything is one-shuffle shapes —
-  *   - exact: hash-partition on the content key, keep rank-1;
-  *   - MinHash: signatures are per-row projections (no shuffle), the
-  *     LSH band join shuffles only (band, bandHash) pairs — tiny vs the
-  *     corpus — and candidate verification joins back by id;
+  *   - exact: one map-side-combined aggregation on the content key,
+  *     keeping the smallest id;
+  *   - MinHash: signatures come from a map-only per-document kernel,
+  *     the LSH band join shuffles only (band, bandHash) pairs — tiny vs
+  *     the corpus — and candidate verification joins back by id;
+  *   - blocked n-gram Jaccard: each shingle set crosses one exchange
+  *     on its block, and the pairs are enumerated inside the block's
+  *     task; oversized blocks are split into fragment pairs first;
   *   - SimHash: per-row 64-bit signature, near-dup candidates via
   *     banded equality on signature quarters (Hamming<=3 within bands).
   */
@@ -98,41 +102,60 @@ object Dedup {
     * array_intersect/size).
     */
   private[graft] def shingleSetsOf(df: DataFrame, idCol: String,
-      textCol: String, n: Int): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
+      textCol: String, n: Int): DataFrame =
+    withShingleSets(df, Seq(col(idCol).as("__id")), col(textCol), n)
+
+  /** The shingle-set kernel behind [[shingleSetsOf]]: the `keep`
+    * columns followed by `__sh`, the distinct n-grams of `text`, one
+    * row per input row with >= 1 shingle (null text and texts of
+    * fewer than `n` tokens drop out).
+    */
+  private def withShingleSets(df: DataFrame, keep: Seq[Column],
+      text: Column, n: Int): DataFrame = {
+    import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.types._
-    val in = df.select(col(idCol), col(textCol).cast("string"))
-    val idf = in.schema.head
-    val schema = StructType(Seq(
-      StructField("__id", idf.dataType, idf.nullable),
-      StructField("__sh", ArrayType(StringType, containsNull = false))))
+    val in = df.select(keep :+ text.cast("string"): _*)
+    val k = keep.size
+    val schema = StructType(in.schema.fields.take(k) :+
+      StructField("__sh", ArrayType(StringType, containsNull = false)))
     in.mapPartitions { it =>
       it.flatMap { r =>
-        val text = if (r.isNullAt(1)) null else r.getString(1)
-        if (text == null) Iterator.empty
+        val sh = if (r.isNullAt(k)) null else shingleSet(r.getString(k), n)
+        if (sh == null) Iterator.empty
         else {
-          val toks = text.split(" ", -1)
-          if (toks.length < n) Iterator.empty
-          else {
-            val seen = new java.util.LinkedHashSet[String]
-            val sb = new java.lang.StringBuilder
-            var p = 0
-            while (p <= toks.length - n) {
-              sb.setLength(0)
-              var j = 0
-              while (j < n) {
-                if (j > 0) sb.append(' ')
-                sb.append(toks(p + j)); j += 1
-              }
-              seen.add(sb.toString); p += 1
-            }
-            val arr = new Array[String](seen.size)
-            seen.toArray(arr)
-            Iterator.single(Row(r.get(0), arr.toSeq))
-          }
+          val vals = new Array[Any](k + 1)
+          var c = 0
+          while (c < k) { vals(c) = r.get(c); c += 1 }
+          vals(k) = sh.toSeq
+          Iterator.single(Row.fromSeq(vals.toIndexedSeq))
         }
       }
     }(Encoders.row(schema))
+  }
+
+  /** Distinct space-token n-grams of `text` in first-seen order, or
+    * null when it has fewer than `n` tokens.
+    */
+  private def shingleSet(text: String, n: Int): Array[String] = {
+    val toks = text.split(" ", -1)
+    if (toks.length < n) null
+    else {
+      val seen = new java.util.LinkedHashSet[String]
+      val sb = new java.lang.StringBuilder
+      var p = 0
+      while (p <= toks.length - n) {
+        sb.setLength(0)
+        var j = 0
+        while (j < n) {
+          if (j > 0) sb.append(' ')
+          sb.append(toks(p + j)); j += 1
+        }
+        seen.add(sb.toString); p += 1
+      }
+      val arr = new Array[String](seen.size)
+      seen.toArray(arr)
+      arr
+    }
   }
 
   /** Per-document MinHash signature table `(id, mh0..mh{numHashes-1})`,
@@ -160,7 +183,7 @@ object Dedup {
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 32): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.catalyst.expressions.{XXH64, XxHash64Function}
     import org.apache.spark.unsafe.types.UTF8String
@@ -270,17 +293,17 @@ object Dedup {
     verifyJaccard(cands, df, idCol, textCol, threshold, shingleSize)
   }
 
-  /** Per-pair exact Jaccard from two shingle-set columns — the shared
-    * PAIR-VERIFY KERNEL (round 6): the per-pair intersection runs as a
-    * JVM hash-set probe inside `mapPartitions` instead of the
-    * `array_intersect` expression (which builds its set per evaluation
-    * and dominated the blocked all-pairs paths). Arithmetic identical:
+  /** Per-pair exact Jaccard from two shingle-set columns — the
+    * candidate PAIR-VERIFY KERNEL of [[verifyJaccard]]: the per-pair
+    * intersection runs as a JVM hash-set probe inside `mapPartitions`
+    * instead of the `array_intersect` expression (which builds its set
+    * per evaluation). Arithmetic identical:
     * `|inter| / (|a| + |b| - |inter|)` over distinct sets, the |union|
     * rearrangement, same IEEE order. Input must expose
     * (id_a, sh_a, id_b, sh_b); output (id_a, id_b, jaccard).
     */
   private[graft] def jaccardOfPairs(pairs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.types._
     val in = pairs.select(col("id_a"), col("id_b"),
       col("sh_a"), col("sh_b"))
@@ -323,26 +346,161 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Pairwise token-set Jaccard within candidate blocks (same
-    * `blockCol` value) — the simple, oracle-checkable n-gram Jaccard
-    * dedup. Blocks bound the quadratic term; at scale the block column
-    * is an LSH bucket or length band.
+  /** Pairwise n-gram-set Jaccard within candidate blocks (same
+    * `blockCol` value): the oracle-checkable n-gram Jaccard dedup.
+    * Blocks bound the quadratic term; at scale the block column is an
+    * LSH bucket or length band. Returns `(id_a, id_b, jaccard)` with
+    * `id_a < id_b`, one row per pair of distinct ids sharing a block;
+    * rows with a null block or id, null text or fewer than `n` tokens
+    * take part in no pair. `jaccard = |inter| / (|a| + |b| - |inter|)`
+    * over the distinct n-gram sets.
+    *
+    * Block-local shape (SparkER-style block-centric processing): each
+    * document's shingle set crosses ONE exchange once. The
+    * `(block, id, set)` rows are hash-partitioned on the block and
+    * sorted by `(block, id)` within each partition, and one kernel
+    * walks every contiguous block run: it builds each document's hash
+    * set at most once and enumerates the pairs `i < j` inside the
+    * task. A block self-join would instead carry both sets on every
+    * pair row through a join and a pair repartition, and rebuild a
+    * hash set per pair.
+    *
+    * Hot blocks (FP-Hadoop-style split of oversized reduce groups): a
+    * block-size histogram read with one small aggregate gives each
+    * block's pair count. Blocks at or below the per-task share (total
+    * pairs / shuffle partitions) stay whole, so uniform blocks take the
+    * one-exchange path unchanged. A block above it is cut into
+    * `c ~ sqrt(2 * pairs / share)` fragments by id hash; each row is
+    * replicated to the `c` fragment pairs `(f <= g)` it belongs to,
+    * and every such unit is its own run, so each document pair meets
+    * in exactly one task and no unit holds much more than a share.
     */
   def blockedJaccard(df: DataFrame, idCol: String, textCol: String,
       blockCol: String, n: Int = 3): DataFrame = {
-    val sh = df.select(col(blockCol).as("__blk"), col(idCol).as("__id"))
-      .join(shingleSetsOf(df, idCol, textCol, n), Seq("__id"))
-    val a = sh.select(col("__blk"), col("__id").as("id_a"),
-      col("__sh").as("sh_a"))
-    val b = sh.select(col("__blk"), col("__id").as("id_b"),
-      col("__sh").as("sh_b"))
-    jaccardOfPairs(a.join(b, Seq("__blk"))
-      .filter(col("id_a") < col("id_b"))
-      // same AQE-vs-CPU consideration as minhashNearDups: pair
-      // verification must not collapse onto one task
-      .repartition(
-        df.sparkSession.sessionState.conf.numShufflePartitions))
+    val spark = df.sparkSession
+    val tasks = spark.sessionState.conf.numShufflePartitions
+    val live = df.filter(col(blockCol).isNotNull && col(idCol).isNotNull)
+    val sets = withShingleSets(live,
+      Seq(col(blockCol).as("__blk"), col(idCol).as("__id")),
+      col(textCol), n)
+    // docs with >= n tokens per block, counted without the shingle pass
+    val hist = live
+      .filter(size(split(col(textCol).cast("string"), " ")) >= n)
+      .groupBy(col(blockCol).as("__blk"))
+      .agg(count(lit(1)).as("__m"))
+      .withColumn("__p", col("__m") * (col("__m") - 1) / 2)
+    val sizes = hist.agg(coalesce(sum(col("__p")), lit(0.0)),
+      coalesce(max(col("__p")), lit(0.0))).head()
+    val share = sizes.getDouble(0) / tasks
+    val units =
+      if (sizes.getDouble(1) <= share)
+        sets.select(col("__blk").as("__key"), lit(-1).as("__side"),
+          col("__id"), col("__sh"))
+      else {
+        // at most `tasks` blocks can exceed the share: a small driver
+        // list, broadcast back as (block, fragment count)
+        val hot = hist.filter(col("__p") > share).select(col("__blk"),
+          least(col("__m"), ceil(sqrt(col("__p") * (2.0 / share))))
+            .cast("int").as("__c"))
+        val hotRows = spark.createDataFrame(
+          java.util.Arrays.asList(hot.collect(): _*), hot.schema)
+        val c = coalesce(col("__c"), lit(1))
+        val f = col("__f")
+        val g = col("__g")
+        sets.join(broadcast(hotRows), Seq("__blk"), "left")
+          .select(col("__blk"), col("__id"), col("__sh"), c.as("__c"),
+            pmod(xxhash64(col("__id")), c.cast("long")).cast("int")
+              .as("__f"),
+            explode(sequence(lit(0), c - 1)).as("__g"))
+          // unit (lo, hi) = (least, greatest) of the row's fragment f
+          // and the replica's g; side -1 pairs with every row of a
+          // diagonal unit, sides 0/1 pair only across fragments
+          .select(
+            struct(col("__blk"),
+              (least(f, g) * col("__c") + greatest(f, g)).as("__u"))
+              .as("__key"),
+            when(f === g, -1).when(f < g, 0).otherwise(1).as("__side"),
+            col("__id"), col("__sh"))
+      }
+    blockPairs(units.repartition(tasks, col("__key"))
+      .sortWithinPartitions(col("__key"), col("__id")))
   }
+
+  /** The block-local pair kernel of [[blockedJaccard]]. Input rows
+    * `(__key, __side, __id, __sh)` arrive grouped by `__key` and sorted
+    * by `__id` within a partition; output `(id_a, id_b, jaccard)`.
+    */
+  private def blockPairs(units: DataFrame): DataFrame = {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.types._
+    val idf = units.schema("__id")
+    val schema = StructType(Seq(
+      StructField("id_a", idf.dataType, idf.nullable),
+      StructField("id_b", idf.dataType, idf.nullable),
+      StructField("jaccard", DoubleType, nullable = true)))
+    units.mapPartitions { rows =>
+      val in = rows.buffered
+      new Iterator[Iterator[Row]] {
+        def hasNext: Boolean = in.hasNext
+        def next(): Iterator[Row] = {
+          val key = in.head.get(0)
+          val run = Array.newBuilder[Row]
+          while (in.hasNext && sameValue(in.head.get(0), key))
+            run += in.next()
+          runPairs(run.result())
+        }
+      }.flatten
+    }(Encoders.row(schema))
+  }
+
+  /** All pairs of one run: `i < j` in id order, equal ids skipped, and
+    * a pair of sides `s_i, s_j >= 0` kept only when `s_i != s_j`.
+    */
+  private def runPairs(run: Array[Row]): Iterator[Row] = {
+    val m = run.length
+    val ids = run.map(_.get(2))
+    val sides = run.map(_.getInt(1))
+    val sh = run.map(_.getSeq[String](3).toArray)
+    // first index of each id's equal-id group (sorted, so adjacent)
+    val grp = new Array[Int](m)
+    var i = 1
+    while (i < m) {
+      grp(i) = if (sameValue(ids(i), ids(i - 1))) grp(i - 1) else i
+      i += 1
+    }
+    val sets = new Array[java.util.HashSet[String]](m)
+    def setOf(k: Int): java.util.HashSet[String] = {
+      if (sets(k) == null) {
+        val s = new java.util.HashSet[String](sh(k).length * 2)
+        sh(k).foreach(s.add)
+        sets(k) = s
+      }
+      sets(k)
+    }
+    // probe the larger set with the smaller array (the count is the
+    // same either way); same arithmetic as [[jaccardOfPairs]], so the
+    // doubles are bit-identical
+    def jaccard(a: Int, b: Int): Double = {
+      val (small, large) =
+        if (sh(a).length <= sh(b).length) (a, b) else (b, a)
+      val set = setOf(large)
+      var inter = 0
+      sh(small).foreach(t => if (set.contains(t)) inter += 1)
+      val x = inter.toDouble
+      x / ((sh(a).length + sh(b).length) - x)
+    }
+    Iterator.range(0, m).flatMap { a =>
+      Iterator.range(a + 1, m)
+        .filter(b => grp(b) != grp(a) &&
+          (sides(a) < 0 || sides(a) != sides(b)))
+        .map(b => Row(ids(a), ids(b), jaccard(a, b)))
+    }
+  }
+
+  /** Spark value equality for grouping on the JVM side: `Row.equals`
+    * compares binary by content and NaN as equal to NaN.
+    */
+  private def sameValue(a: Any, b: Any): Boolean = Row(a) == Row(b)
 
   /** Per-document SimHash table `(id, simhash)`, computed relationally
     * like [[minhashSignatures]]: explode tokens, ONE groupBy(id) with 64
@@ -450,7 +608,7 @@ object Dedup {
       .join(sets.select(col("__id").as("id_b"), col("__sh").as("__sb")),
         Seq("id_b"))
     val both = locally {
-      import org.apache.spark.sql.{Encoders, Row}
+      import org.apache.spark.sql.Encoders
       import org.apache.spark.sql.types._
       val in = joined.select(col("id_a"), col("id_b"),
         col("__sa"), col("__sb"))

@@ -125,6 +125,100 @@ class DedupKnnSpec extends SparkSpec {
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L))
   }
 
+  /** `(blk, doc_id, text)` corpus for blockedJaccard: shared-vocabulary
+    * texts over twelve blocks plus every edge case the contract names —
+    * null block, null id, null text, text without a 3-gram, empty text,
+    * exact duplicates within and across blocks, a repeated id.
+    */
+  private def blockCorpus(hotShare: Double = 0.0) = {
+    val rng = new scala.util.Random(11)
+    val vocab = Vector("a", "b", "c", "d", "e", "f")
+    val texts = (0 until 60).map(_ =>
+      Vector.fill(4 + rng.nextInt(9))(vocab(rng.nextInt(vocab.size)))
+        .mkString(" "))
+    val hot = (60 * hotShare).toInt
+    val rows = (0 until 60).map { i =>
+      val blk: java.lang.Long = if (i < hot) 0L else (i % 12).toLong + 1
+      Row(blk, i.toLong, texts(i))
+    } ++ Seq(
+      Row(null, 100L, texts(0)),        // null block
+      Row(1L, null, texts(1)),          // null id
+      Row(1L, 101L, null),              // null text
+      Row(1L, 102L, "a b"),             // no 3-gram
+      Row(1L, 103L, ""),                // empty text
+      Row(2L, 104L, texts(1)),          // exact dup of doc 1 (block 2)
+      Row(2L, 105L, texts(2)), Row(2L, 106L, texts(2)), // dup pair
+      Row(3L, 107L, texts(1)),          // dup of doc 1, other block
+      Row(1L, 0L, texts(5)))            // id 0 again, same block
+    df("blk BIGINT, doc_id BIGINT, text STRING", rows)
+  }
+
+  /** Independent blockedJaccard reference: within-block cross join and
+    * `array_intersect` over [[refShingles]].
+    */
+  private def refBlocked(d: org.apache.spark.sql.DataFrame) = {
+    val sh = d.select(col("blk"), col("doc_id").as("id"),
+        refShingles(col("text"), 3).as("sh"))
+      .filter(col("blk").isNotNull && col("id").isNotNull &&
+        size(col("sh")) > 0)
+    val a = sh.select(col("blk"), col("id").as("id_a"), col("sh").as("sa"))
+    val b = sh.select(col("blk"), col("id").as("id_b"), col("sh").as("sb"))
+    val inter = size(array_intersect(col("sa"), col("sb")))
+    a.join(b, "blk").filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"),
+        (inter / (size(col("sa")) + size(col("sb")) - inter))
+          .as("jaccard"))
+  }
+
+  private def triples(d: org.apache.spark.sql.DataFrame) =
+    d.select("id_a", "id_b", "jaccard").collect().toSeq
+      .map(r => (r.get(0), r.get(1), r.getDouble(2)))
+
+  private def assertMatchesReference(d: org.apache.spark.sql.DataFrame) = {
+    val got = triples(Dedup.blockedJaccard(d, "doc_id", "text", "blk"))
+    val ref = triples(refBlocked(d))
+    def counts(ts: Seq[(Any, Any, Double)]) =
+      ts.groupBy(identity).view.mapValues(_.size).toMap
+    assert(counts(got) == counts(ref))
+    got
+  }
+
+  test("blockedJaccard == within-block cross-join reference, exactly " +
+      "(null block/id/text, short and empty text, dups, BIGINT ids)") {
+    val d = blockCorpus()
+    val got = assertMatchesReference(d)
+    // even blocks: the one-exchange path, with no hot-block split join
+    assert(!Dedup.blockedJaccard(d, "doc_id", "text", "blk")
+      .queryExecution.executedPlan.toString.contains("Join"))
+    val ids = got.flatMap(t => Seq(t._1, t._2)).toSet
+    assert(!ids.exists(Set[Any](100L, 101L, 102L, 103L)))
+    assert(!got.exists(t => t._1 == t._2), "equal ids must not pair")
+    assert(got.contains((1L, 104L, 1.0)) && got.contains((105L, 106L, 1.0)))
+    assert(!got.exists(t => t._1 == 1L && t._2 == 107L),
+      "pairs across blocks must not appear")
+    assert(got.map(_._3).toSet.size > 5, "degenerate fixture")
+  }
+
+  test("blockedJaccard == reference with STRING ids (string order)") {
+    val d = blockCorpus().withColumn("doc_id",
+      concat(lit("d"), col("doc_id").cast("string")))
+    val got = assertMatchesReference(d)
+    assert(got.forall { case (a, b, _) =>
+      a.asInstanceOf[String] < b.asInstanceOf[String] })
+  }
+
+  test("blockedJaccard hot block (>= 80% of docs): == reference, and " +
+      "its pairs are enumerated in more than one task") {
+    val d = blockCorpus(hotShare = 0.85)
+    assertMatchesReference(d)
+    val hotIds = d.filter(col("blk") === 0).select("doc_id")
+    val tasks = Dedup.blockedJaccard(d, "doc_id", "text", "blk")
+      .select(col("id_a"), spark_partition_id().as("pid"))
+      .join(hotIds, col("id_a") === col("doc_id"), "left_semi")
+      .select("pid").distinct().count()
+    assert(tasks > 1, "the hot block's pairs ran in one task")
+  }
+
   test("identical text -> identical simhash; different text differs") {
     val byId = Dedup.simhashes(docs(), "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -341,23 +435,28 @@ class DedupKnnSpec extends SparkSpec {
       "loaded IVF-PQ index must answer exactly like the in-memory one")
   }
 
-  test("MinhashIndex: incremental batch dedup == one-shot over union") {
-    import graft.dedup.MinhashIndex
-    val corpus = df("doc_id BIGINT, text STRING", (1L to 40L).map(i =>
+  private def mhCorpus() = df("doc_id BIGINT, text STRING",
+    (1L to 40L).map(i =>
       Row(i, s"document number $i about topic ${i % 7} with shared " +
         s"words and unique token token$i suffix tail words here")))
-    // batch: near-dups of corpus docs (drop first word), an internal
-    // dup pair, and fresh docs
-    val batch = df("doc_id BIGINT, text STRING",
-      (1L to 5L).map(i => Row(100L + i,
-        s"number $i about topic ${i % 7} with shared " +
-          s"words and unique token token$i suffix tail words here")) ++
-        Seq(Row(200L, "completely fresh content alpha beta gamma " +
-          "delta epsilon zeta eta theta"),
-          Row(201L, "completely fresh content alpha beta gamma " +
-            "delta epsilon zeta eta theta iota"),
-          Row(202L, "nothing like anything else entirely novel " +
-            "words qq ww ee rr tt yy uu")))
+
+  // near-dups of corpus docs (drop first word), an internal dup pair,
+  // and fresh docs
+  private def mhBatch() = df("doc_id BIGINT, text STRING",
+    (1L to 5L).map(i => Row(100L + i,
+      s"number $i about topic ${i % 7} with shared " +
+        s"words and unique token token$i suffix tail words here")) ++
+      Seq(Row(200L, "completely fresh content alpha beta gamma " +
+        "delta epsilon zeta eta theta"),
+        Row(201L, "completely fresh content alpha beta gamma " +
+          "delta epsilon zeta eta theta iota"),
+        Row(202L, "nothing like anything else entirely novel " +
+          "words qq ww ee rr tt yy uu")))
+
+  test("MinhashIndex: incremental batch dedup == one-shot over union") {
+    import graft.dedup.MinhashIndex
+    val corpus = mhCorpus()
+    val batch = mhBatch()
     val root = java.nio.file.Files
       .createTempDirectory("mhidx").toString
     MinhashIndex.build(corpus, "doc_id", "text", root)
@@ -390,6 +489,27 @@ class DedupKnnSpec extends SparkSpec {
       .collect().map(r => (r.getLong(1), r.getLong(0))).toSet
     assert(inc3.map(_._2).contains(202L) || inc3.map(_._1).contains(202L),
       s"appended doc must be findable: $inc3")
+  }
+
+  test("MinhashIndex: a reliable checkpoint dir holds the candidates; " +
+      "pairs unchanged") {
+    import graft.dedup.MinhashIndex
+    val root = java.nio.file.Files.createTempDirectory("mhidx").toString
+    MinhashIndex.build(mhCorpus(), "doc_id", "text", root)
+    def pairs() = MinhashIndex.batchNearDups(mhBatch(), mhCorpus(),
+        "doc_id", "text", root, threshold = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .toSet
+    val local = pairs()
+    val dir = java.nio.file.Files.createTempDirectory("mh-ckpt").toString
+    spark.sparkContext.setCheckpointDir(dir)
+    try {
+      assert(pairs() == local)
+      assert(local.nonEmpty)
+      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(java.nio.file.Files.isRegularFile(_)).count()
+      assert(wrote > 0, "no checkpoint files were written")
+    } finally spark.sparkContext.setCheckpointDir(null)
   }
 
   test("PQ: codes match a driver-side reference argmin; ADC recall") {

@@ -446,6 +446,23 @@ class PlanDisciplineSpec extends SparkSpec {
     assert(!plan.contains("Window"), plan.take(1200))
   }
 
+  test("blockedJaccard on uniform blocks: ONE block exchange, no join " +
+      "on the block key, no exchange after pair enumeration") {
+    val d = spark.range(0, 400).selectExpr("id AS doc_id",
+      "id % 20 AS blk",
+      "concat_ws(' ', 'w' || id % 7, 'w' || id % 5, 'w' || id % 3, " +
+        "'w' || id % 2) AS text")
+    val out = graft.dedup.Dedup.blockedJaccard(d, "doc_id", "text", "blk")
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("Join"), plan)
+    assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1, plan)
+    // the topmost MapPartitions is the pair kernel: nothing above it
+    // may shuffle
+    val kernel = plan.indexOf("MapPartitions")
+    assert(kernel > 0 && !plan.take(kernel).contains("Exchange"), plan)
+    assert(out.count() == 20L * 190L)
+  }
+
   test("containment: candidate + verify joins are equi-joins only") {
     val d = spark.range(0, 100).selectExpr("id AS doc_id",
       "concat('w', id % 5, ' x', id % 7, ' y', id % 3, ' z', id % 11, " +
