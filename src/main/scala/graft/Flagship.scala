@@ -107,25 +107,20 @@ object Flagship {
   def fitPipeline(spark: SparkSession, nImages: Long,
       eventsPerImage: Int): Pipeline = {
     val pipe = pipelineDef()
-    val fitInput = fitProjection(pipe,
-      joinedInput(spark, nImages, eventsPerImage))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try { pipe.fit(fitInput); pipe }
-    finally { fitInput.unpersist(false); () }
+    graft.core.Materialize.scoped(fitProjection(pipe,
+      joinedInput(spark, nImages, eventsPerImage)))(pipe.fit)
   }
 
   def features(spark: SparkSession, nImages: Long,
       eventsPerImage: Int, hotFraction: Double = 0.0,
-      hotEntities: Seq[String] = Seq.empty,
-      cacheFitInput: Boolean = true): DataFrame =
+      hotEntities: Seq[String] = Seq.empty): DataFrame =
     featuresOver(joinedInput(spark, nImages, eventsPerImage,
-      hotFraction, hotEntities), cacheFitInput)
+      hotFraction, hotEntities))
 
   /** Fit + transform over a caller-supplied joined input plan (see
     * [[joinedInputFrom]] for the stored-table production shape).
     */
-  def featuresOver(joined: DataFrame,
-      cacheFitInput: Boolean = true): DataFrame = {
+  def featuresOver(joined: DataFrame): DataFrame = {
     val pipe = pipelineDef()
     // The pipeline's fit passes each re-execute their input plan;
     // persist the fit projection once so the as-of join + generation
@@ -135,8 +130,7 @@ object Flagship {
     // (Cache stays registered so repeated fits also read it; drop it
     // with spark.catalog.clearCache() when done.)
     val fitInput = fitProjection(pipe, joined)
-    if (cacheFitInput)
-      fitInput.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     pipe.fit(fitInput)
     pipe.transform(joined)
   }

@@ -58,13 +58,12 @@ object Stats {
       .select(pair.as("p"), weight.cast("double").as("w"))
       .filter(col("p.v").isNotNull && !isnan(col("p.v")))
       .select(col("p.k").as("k"), col("p.v").as("v"), col("w"))
-    val (fv, cleanup) = keyedCumFractions(pairs)
-    try {
+    keyedCumFractions(pairs) { fv =>
       val hits = fv.filter(col("f") >= 0.5)
         .groupBy(col("k")).agg(min(col("v")).as("med"))
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       columns.map(c => c -> hits.get(c)).toMap
-    } finally cleanup()
+    }
   }
 
   /** Distributed keyed cumulative fractions: input (k, v, w) rows;
@@ -75,39 +74,42 @@ object Stats {
     *   3. per-(key, partition) totals (tiny collect) become broadcast
     *      prefix offsets + per-key totals;
     *   4. Window.partitionBy(k, pid).orderBy(v) running sum + offset.
+    * `body` runs while the range-partitioned frame is cached; it must
+    * consume or cut what it returns.
     */
-  private[graft] def keyedCumFractions(pairs: DataFrame)
-      : (DataFrame, () => Unit) = {
+  private[graft] def keyedCumFractions[T](pairs: DataFrame)
+      (body: DataFrame => T): T = {
     val parts = math.max(1,
       pairs.sparkSession.sessionState.conf.numShufflePartitions)
-    val ranged = pairs
+    val ranged0 = pairs
       .groupBy(col("k"), col("v")).agg(sum(col("w")).as("w"))
       .repartitionByRange(parts, col("k"), col("v"))
       .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val partTotals = ranged.groupBy(col("k"), col("__pid"))
-      .agg(sum(col("w")).as("pw"))
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(2)))
-    val totals = partTotals.groupBy(_._1)
-      .map { case (k, a) => k -> a.map(_._3).sum }
-    val offsets = partTotals.groupBy(_._1).toSeq.flatMap { case (k, a) =>
-      val sorted = a.sortBy(_._2)
-      sorted.map(_._2).zip(
-        sorted.map(_._3).scanLeft(0.0)(_ + _).init)
-        .map { case (pid, off) => s"$k#$pid" -> off }.toSeq
-    }.toMap
-    if (partTotals.isEmpty)
-      return (ranged.select(col("k"), col("v"), lit(0.0).as("f")),
-        () => { ranged.unpersist(false); () })
-    val offCol = coalesce(element_at(typedLit(offsets),
-      concat_ws("#", col("k"), col("__pid"))), lit(0.0))
-    val totCol = element_at(typedLit(totals), col("k"))
-    val wPart = Window.partitionBy(col("k"), col("__pid"))
-      .orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val fv = ranged.select(col("k"), col("v"),
-      ((sum(col("w")).over(wPart) + offCol) / totCol).as("f"))
-    (fv, () => { ranged.unpersist(false); () })
+    Materialize.scoped(ranged0) { ranged =>
+      val partTotals = ranged.groupBy(col("k"), col("__pid"))
+        .agg(sum(col("w")).as("pw"))
+        .collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(2)))
+      val totals = partTotals.groupBy(_._1)
+        .map { case (k, a) => k -> a.map(_._3).sum }
+      val offsets = partTotals.groupBy(_._1).toSeq.flatMap { case (k, a) =>
+        val sorted = a.sortBy(_._2)
+        sorted.map(_._2).zip(
+          sorted.map(_._3).scanLeft(0.0)(_ + _).init)
+          .map { case (pid, off) => s"$k#$pid" -> off }.toSeq
+      }.toMap
+      if (partTotals.isEmpty)
+        body(ranged.select(col("k"), col("v"), lit(0.0).as("f")))
+      else {
+        val offCol = coalesce(element_at(typedLit(offsets),
+          concat_ws("#", col("k"), col("__pid"))), lit(0.0))
+        val totCol = element_at(typedLit(totals), col("k"))
+        val wPart = Window.partitionBy(col("k"), col("__pid"))
+          .orderBy(col("v"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        body(ranged.select(col("k"), col("v"),
+          ((sum(col("w")).over(wPart) + offCol) / totCol).as("f")))
+      }
+    }
   }
 
   /** Exact weighted quantiles of SEVERAL columns in one distributed
@@ -131,7 +133,6 @@ object Stats {
       .filter(col("p.v").isNotNull && !isnan(col("p.v")))
       .select(col("p.k").as("k"), col("p.v").as("v"),
         col("__mw").as("w"))
-    val (fv, cleanup) = keyedCumFractions(pairs)
     val slots = cols.flatMap(c => perCol(c).indices.map(i => (c, i)))
     val aggs = slots.zipWithIndex.flatMap { case ((c, i), s) =>
       val q = perCol(c)(i)
@@ -143,8 +144,7 @@ object Stats {
         min(when(in && col("f") >= q, col("v"))).as(s"v_hi_$s"))
     }
     val row =
-      try fv.agg(aggs.head, aggs.tail: _*).head()
-      finally cleanup()
+      keyedCumFractions(pairs)(_.agg(aggs.head, aggs.tail: _*).head())
     val bySlot = slots.zipWithIndex.map { case ((c, i), s) =>
       (c, i) -> interp(perCol(c)(i),
         Option(row.getAs[java.lang.Double](s"f_lo_$s")).map(_.toDouble),
@@ -290,26 +290,23 @@ object Stats {
         lit(1.0).as("w"))
       .filter(col("v").isNotNull && !isnan(col("v")))
     // BOTH CDFs in one keyed pass (one shuffle, one offsets collect)
-    val (allF, rel) = keyedCumFractions(
-      side(cur, curCol, "c").unionByName(side(ref, refCol, "r")))
-    // the (x -> mapped) table is |distinct cur| rows; localCheckpoint
-    // materializes it eagerly so every upstream persist can release
-    // (the rankAuc pattern) — nothing cached survives this call
-    val mapped =
-      try {
-        val refF = allF.filter(col("k") === "r")
-        val curF = allF.filter(col("k") === "c")
-        val u = refF.select(col("f").as("s"), lit(1).as("isref"),
-            col("f").as("fr"), col("v").as("vr"),
-            lit(null).cast("double").as("x"))
-          .unionByName(curF.select(col("f").as("s"),
-            lit(0).as("isref"), lit(null).cast("double").as("fr"),
-            lit(null).cast("double").as("vr"), col("v").as("x")))
-        val (lo, relLo) = refCarryFill(u, forward = true)
-        val (hi, relHi) = refCarryFill(u, forward = false)
-        try {
+    // the (x -> mapped) table is |distinct cur| rows; the eager cut
+    // materializes it so every upstream cache can release (the
+    // rankAuc pattern) — nothing cached survives this call
+    val mapped = keyedCumFractions(
+      side(cur, curCol, "c").unionByName(side(ref, refCol, "r"))) { allF =>
+      val refF = allF.filter(col("k") === "r")
+      val curF = allF.filter(col("k") === "c")
+      val u = refF.select(col("f").as("s"), lit(1).as("isref"),
+          col("f").as("fr"), col("v").as("vr"),
+          lit(null).cast("double").as("x"))
+        .unionByName(curF.select(col("f").as("s"),
+          lit(0).as("isref"), lit(null).cast("double").as("fr"),
+          lit(null).cast("double").as("vr"), col("v").as("x")))
+      refCarryFill(u, forward = true) { lo =>
+        refCarryFill(u, forward = false) { hi =>
           val q = col("q")
-          lo.join(hi, "x")
+          Materialize.truncate(lo.join(hi, "x")
             .select(col("x").as("__qx"),
               when(col("flo").isNull && col("vlo").isNull &&
                 col("fhi").isNull && col("vhi").isNull,
@@ -320,10 +317,10 @@ object Stats {
                 .otherwise(col("vlo") + (q - col("flo")) /
                   (col("fhi") - col("flo")) *
                   (col("vhi") - col("vlo")))
-                .as("__m"))
-            .localCheckpoint(true)
-        } finally { relLo(); relHi() }
-      } finally rel()
+                .as("__m")), eager = true)
+        }
+      }
+    }
     val vIn = col(curCol).cast("double")
     cur.join(mapped, vIn === col("__qx"), "left")
       .withColumn(out, when(vIn.isNull || isnan(vIn),
@@ -338,66 +335,67 @@ object Stats {
     * (backward) of boundary payloads. Forward order puts a
     * reference BEFORE a probe at equal f (f_r <= q inclusive);
     * backward order the reverse (f_r >= q inclusive). Returns probe
-    * rows only: forward (x, q, flo, vlo), backward (x, fhi, vhi).
+    * rows only: forward (x, q, flo, vlo), backward (x, fhi, vhi),
+    * to `body`, which runs while the range-partitioned union is cached.
     */
-  private def refCarryFill(u: DataFrame, forward: Boolean)
-      : (DataFrame, () => Unit) = {
+  private def refCarryFill[T](u: DataFrame, forward: Boolean)
+      (body: DataFrame => T): T = {
     val parts = math.max(1,
       u.sparkSession.sessionState.conf.numShufflePartitions)
     val ord: Seq[Column] =
       if (forward) Seq(col("s").asc, col("isref").desc)
       else Seq(col("s").asc, col("isref").asc)
-    val ranged = u.repartitionByRange(parts, ord: _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val boundary = ranged.filter(col("isref") === 1)
-      .groupBy(col("__pid"))
-      .agg((if (forward) max_by(struct(col("fr"), col("vr")), col("fr"))
-        else min_by(struct(col("fr"), col("vr")), col("fr"))).as("p"))
-      .collect()
-      .map(r => r.getInt(0) ->
-        (r.getStruct(1).getDouble(0), r.getStruct(1).getDouble(1)))
-      .sortBy(_._1)
-    // carry(pid) = nearest preceding (forward) / following (backward)
-    // partition's boundary payload, skipping ref-free partitions
-    val carries: Map[Int, (Double, Double)] = {
-      val pids = 0 until parts
-      val walk = if (forward) pids else pids.reverse
-      var last: Option[(Double, Double)] = None
-      val m = scala.collection.mutable.Map[Int, (Double, Double)]()
-      val byPid = boundary.toMap
-      walk.foreach { pid =>
-        last.foreach(p => m(pid) = p)
-        byPid.get(pid).foreach(p => last = Some(p))
+    Materialize.scoped(u.repartitionByRange(parts, ord: _*)
+        .withColumn("__pid", spark_partition_id())) { ranged =>
+      val boundary = ranged.filter(col("isref") === 1)
+        .groupBy(col("__pid"))
+        .agg((if (forward) max_by(struct(col("fr"), col("vr")), col("fr"))
+          else min_by(struct(col("fr"), col("vr")), col("fr"))).as("p"))
+        .collect()
+        .map(r => r.getInt(0) ->
+          (r.getStruct(1).getDouble(0), r.getStruct(1).getDouble(1)))
+        .sortBy(_._1)
+      // carry(pid) = nearest preceding (forward) / following (backward)
+      // partition's boundary payload, skipping ref-free partitions
+      val carries: Map[Int, (Double, Double)] = {
+        val pids = 0 until parts
+        val walk = if (forward) pids else pids.reverse
+        var last: Option[(Double, Double)] = None
+        val m = scala.collection.mutable.Map[Int, (Double, Double)]()
+        val byPid = boundary.toMap
+        walk.foreach { pid =>
+          last.foreach(p => m(pid) = p)
+          byPid.get(pid).foreach(p => last = Some(p))
+        }
+        m.toMap
       }
-      m.toMap
+      val frMap = carries.map { case (k, v) => k -> v._1 }
+      val vrMap = carries.map { case (k, v) => k -> v._2 }
+      def carry(m: Map[Int, Double]) =
+        if (m.isEmpty) lit(null).cast("double")
+        else element_at(typedLit(m), col("__pid"))
+      val w =
+        if (forward) Window.partitionBy(col("__pid")).orderBy(ord: _*)
+          .rowsBetween(Window.unboundedPreceding, 0)
+        else Window.partitionBy(col("__pid")).orderBy(ord: _*)
+          .rowsBetween(0, Window.unboundedFollowing)
+      def fill(c: String) = {
+        val gated = when(col("isref") === 1, col(c))
+        if (forward) last(gated, ignoreNulls = true).over(w)
+        else first(gated, ignoreNulls = true).over(w)
+      }
+      val filled = ranged.select(col("x"), col("s"), col("isref"),
+        coalesce(fill("fr"), carry(frMap)).as("__f"),
+        coalesce(fill("vr"), carry(vrMap)).as("__v"))
+        .filter(col("isref") === 0)
+      val outDf =
+        if (forward)
+          filled.select(col("x"), col("s").as("q"),
+            col("__f").as("flo"), col("__v").as("vlo"))
+        else
+          filled.select(col("x"), col("__f").as("fhi"),
+            col("__v").as("vhi"))
+      body(outDf)
     }
-    val frMap = carries.map { case (k, v) => k -> v._1 }
-    val vrMap = carries.map { case (k, v) => k -> v._2 }
-    def carry(m: Map[Int, Double]) =
-      if (m.isEmpty) lit(null).cast("double")
-      else element_at(typedLit(m), col("__pid"))
-    val w =
-      if (forward) Window.partitionBy(col("__pid")).orderBy(ord: _*)
-        .rowsBetween(Window.unboundedPreceding, 0)
-      else Window.partitionBy(col("__pid")).orderBy(ord: _*)
-        .rowsBetween(0, Window.unboundedFollowing)
-    def fill(c: String) = {
-      val gated = when(col("isref") === 1, col(c))
-      if (forward) last(gated, ignoreNulls = true).over(w)
-      else first(gated, ignoreNulls = true).over(w)
-    }
-    val filled = ranged.select(col("x"), col("s"), col("isref"),
-      coalesce(fill("fr"), carry(frMap)).as("__f"),
-      coalesce(fill("vr"), carry(vrMap)).as("__v"))
-      .filter(col("isref") === 0)
-    val outDf =
-      if (forward)
-        filled.select(col("x"), col("s").as("q"),
-          col("__f").as("flo"), col("__v").as("vlo"))
-      else
-        filled.select(col("x"), col("__f").as("fhi"),
-          col("__v").as("vhi"))
-    (outDf, () => { ranged.unpersist(false); () })
   }
 }

@@ -144,16 +144,9 @@ object MinhashIndex {
     // band subtree — the stored-band parquet read, the batch signature
     // kernel and the band joins all ran 3x (probe-measured ~15% of
     // q93). Pairs are id-only rows bounded by the LSH collision count.
-    // Same durability rule as Components: with a reliable checkpoint
-    // dir set, an eager durable checkpoint survives executor loss;
-    // otherwise a LAZY localCheckpoint, computed once on first use,
-    // whose blocks live on the executors — losing one fails the query,
-    // and the caller must run it again.
-    val distinctCands = vsCorpus.unionByName(within).distinct()
-    val cands =
-      if (batch.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        distinctCands.checkpoint(true)
-      else distinctCands.localCheckpoint(false)
+    // A lazy cut: the first consumer computes it once.
+    val cands = graft.core.Materialize.truncate(
+      vsCorpus.unionByName(within).distinct(), eager = false)
 
     val candIds = cands.select(col("id_a").as("cid"))
       .unionByName(cands.select(col("id_b").as("cid"))).distinct()

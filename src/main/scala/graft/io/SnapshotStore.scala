@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Materialize
 import java.nio.file.{Files, Paths, Path}
 import scala.jdk.CollectionConverters._
 
@@ -382,9 +383,7 @@ object SnapshotStore {
     // write observe ONE execution of the input plan — a
     // non-deterministic input (rand, unstable sampling) would otherwise
     // record lineage that disagrees with the stored files
-    val bucketed = df.withColumn(B, bucketExpr)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped(df.withColumn(B, bucketExpr)) { bucketed =>
       val incoming = lineageOf(bucketed, statsCols)
       // resume from the latest manifest INCLUDING incomplete ones: a
       // truncated run's buckets are already on disk and must be skipped
@@ -435,7 +434,7 @@ object SnapshotStore {
       // it by default (latestSnapshot/read), the next write resumes it
       writeManifest(root, snap, entries, incomplete = remaining.nonEmpty)
       WriteResult(snap, chosen, carried, remaining)
-    } finally bucketed.unpersist(false)
+    }
   }
 
   /** Dynamic-partition-OVERWRITE commit (Iceberg's
@@ -464,9 +463,7 @@ object SnapshotStore {
       s"overwriteBuckets: $root has an incomplete snapshot newer " +
         s"than v$prevSnap — resume that write first")
     val bucketSet = buckets.toSet
-    val bucketed = df.withColumn(B, bucketExpr)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped(df.withColumn(B, bucketExpr)) { bucketed =>
       val incoming = lineageOf(bucketed, statsCols)
       val stray = incoming.keys.filterNot(bucketSet.contains).toSeq
       require(stray.isEmpty,
@@ -512,7 +509,7 @@ object SnapshotStore {
       writeManifest(root, snap, entries, incomplete = false)
       WriteResult(snap, chosen,
         (carriedOther.map(_.bucket) ++ carriedSame).sorted, Seq.empty)
-    } finally bucketed.unpersist(false)
+    }
   }
 
   /** Bucket-subset read: exactly the listed buckets at a snapshot —
@@ -590,10 +587,8 @@ object SnapshotStore {
       if (layoutCols.isEmpty) Seq(col(B))
       else Seq(col(B), Layout.zValue(layoutCols.map(col),
         Layout.rangesOf(df0, layoutCols), bits))
-    val clustered = df0.repartition(col(B))
-      .sortWithinPartitions(sortKeys: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped(df0.repartition(col(B))
+        .sortWithinPartitions(sortKeys: _*)) { clustered =>
       val runDir = s"$root/runs/run=$snap"
       dropStaleRunDir(root, snap)
       clustered.write.partitionBy(B).mode("append").parquet(runDir)
@@ -627,7 +622,7 @@ object SnapshotStore {
         incomplete = false)
       WriteResult(snap, entries.map(_.bucket).sorted, Seq.empty,
         Seq.empty)
-    } finally { clustered.unpersist(false); () }
+    }
   }
 
   /** Snapshot-scoped read: exactly the files the manifest lists. The

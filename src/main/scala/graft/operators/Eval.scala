@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Materialize
+import graft.text.Sharding.exclusiveCumSums
 
 /** Feature-evaluation metrics for screening candidate features before
   * training: rank-based ROC AUC, tie-corrected Spearman correlation,
@@ -13,7 +15,7 @@ import org.apache.spark.sql.functions._
   * All are built so a 100 TB run never materializes per-row ranks:
   * AUC reduces to one groupBy over DISTINCT feature values plus the
   * two-phase exclusive cumulative sum
-  * ([[graft.text.Sharding.exclusiveCumSumRaw]] — range-partitioned,
+  * ([[graft.text.Sharding.exclusiveCumSums]] — range-partitioned,
   * no single-partition stage), and IV is a \|levels\|-row aggregation.
   * Numerators are exact BIGINTs (pair half-units / integer
   * nano-units), so totals are independent of float summation order
@@ -52,7 +54,7 @@ object Eval {
     // ONE scan: invalid rows fold into the same partial aggregation
     // under __ok=false (their count is the only thing kept); a
     // non-0/1 label on an otherwise-valid row fails loudly
-    val byValue = df
+    val byValue0 = df
       .select(valid.as("__ok"),
         when(valid, v).as("__v"),
         when(!valid, lit(null).cast("long"))
@@ -63,32 +65,30 @@ object Eval {
       .groupBy(col("__ok"), col("__v"))
       .agg(sum(col("__y")).as("__np"),
         count(lit(1)).as("__n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val excluded = byValue.filter(!col("__ok"))
-      .agg(coalesce(sum(col("__n")), lit(0L)))
-      .head().getLong(0)
-    val levels = byValue.filter(col("__ok"))
-      .withColumn("__nn", col("__n") - col("__np"))
-    val (ranked, cleanup) = graft.text.Sharding.exclusiveCumSumRaw(
-      levels, Seq(col("__v")), col("__nn"), "__cum_nn")
-    val out =
-      try {
-        val agg = ranked.agg(
+    Materialize.scoped(byValue0) { byValue =>
+      val excluded = byValue.filter(!col("__ok"))
+        .agg(coalesce(sum(col("__n")), lit(0L)))
+        .head().getLong(0)
+      val levels = byValue.filter(col("__ok"))
+        .withColumn("__nn", col("__n") - col("__np"))
+      val agg = exclusiveCumSums(levels, Seq(col("__v")),
+          Seq(col("__nn") -> "__cum_nn")) { ranked =>
+        Materialize.truncate(ranked.agg(
           sum(col("__np")).as("n_pos"),
           sum(col("__nn")).as("n_neg"),
           sum(col("__np") * (lit(2L) * col("__cum_nn") + col("__nn")))
-            .as("auc_num2")).localCheckpoint(true)
-        agg.select(
-          coalesce(col("n_pos"), lit(0L)).as("n_pos"),
-          coalesce(col("n_neg"), lit(0L)).as("n_neg"),
-          lit(excluded).as("n_excluded"),
-          coalesce(col("auc_num2"), lit(0L)).as("auc_num2"),
-          when(col("n_pos") > 0 && col("n_neg") > 0,
-            col("auc_num2").cast("double") /
-              (lit(2.0) * col("n_pos") * col("n_neg")))
-            .as("auc"))
-      } finally { cleanup(); byValue.unpersist(false) }
-    out
+            .as("auc_num2")), eager = true)
+      }
+      agg.select(
+        coalesce(col("n_pos"), lit(0L)).as("n_pos"),
+        coalesce(col("n_neg"), lit(0L)).as("n_neg"),
+        lit(excluded).as("n_excluded"),
+        coalesce(col("auc_num2"), lit(0L)).as("auc_num2"),
+        when(col("n_pos") > 0 && col("n_neg") > 0,
+          col("auc_num2").cast("double") /
+            (lit(2.0) * col("n_pos") * col("n_neg")))
+          .as("auc"))
+    }
   }
 
   /** Tie-corrected Spearman rank correlation between two numeric
@@ -119,42 +119,40 @@ object Eval {
   def spearman(df: DataFrame, colA: String, colB: String): DataFrame = {
     val (a, b) = (col(colA).cast("double"), col(colB).cast("double"))
     val valid = a.isNotNull && !isnan(a) && b.isNotNull && !isnan(b)
-    val sel = df.select(valid.as("__ok"), a.as("__a"), b.as("__b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val excluded = sel.filter(!col("__ok")).count()
-    val base = sel.filter(col("__ok"))
-    def ranks(c: String, out: String): DataFrame = {
-      val byValue = base.groupBy(col(c)).agg(count(lit(1)).as("__c"))
-      val (ranked, cleanup) = graft.text.Sharding.exclusiveCumSumRaw(
-        byValue, Seq(col(c)), col("__c"), "__cum")
-      try {
-        ranked.select(col(c),
-          (lit(2L) * col("__cum") + col("__c") + lit(1L)).as(out))
-          .localCheckpoint(true)
-      } finally cleanup()
+    val sel0 = df.select(valid.as("__ok"), a.as("__a"), b.as("__b"))
+    Materialize.scoped(sel0) { sel =>
+      val excluded = sel.filter(!col("__ok")).count()
+      val base = sel.filter(col("__ok"))
+      def ranks(c: String, out: String): DataFrame = {
+        val byValue = base.groupBy(col(c)).agg(count(lit(1)).as("__c"))
+        exclusiveCumSums(byValue, Seq(col(c)),
+            Seq(col("__c") -> "__cum")) { ranked =>
+          Materialize.truncate(ranked.select(col(c),
+            (lit(2L) * col("__cum") + col("__c") + lit(1L)).as(out)),
+            eager = true)
+        }
+      }
+      val ra = ranks("__a", "__u")
+      val rb = ranks("__b", "__v")
+      val joined = base.join(ra, "__a").join(rb, "__b")
+      val agg = Materialize.truncate(joined.agg(count(lit(1)).as("n"),
+        sum(col("__u")).as("sum_u"), sum(col("__v")).as("sum_v"),
+        sum(col("__u") * col("__v")).as("sum_uv"),
+        sum(col("__u") * col("__u")).as("sum_u2"),
+        sum(col("__v") * col("__v")).as("sum_v2")), eager = true)
+      val nd = col("n").cast("double")
+      val varU = nd * col("sum_u2") - col("sum_u").cast("double") *
+        col("sum_u")
+      val varV = nd * col("sum_v2") - col("sum_v").cast("double") *
+        col("sum_v")
+      agg.select(col("n"), lit(excluded).as("n_excluded"),
+        col("sum_u"), col("sum_v"), col("sum_uv"), col("sum_u2"),
+        col("sum_v2"),
+        when(varU > 0.0 && varV > 0.0,
+          (nd * col("sum_uv") - col("sum_u").cast("double") *
+            col("sum_v")) / (sqrt(varU) * sqrt(varV)))
+          .as("rho"))
     }
-    val ra = ranks("__a", "__u")
-    val rb = ranks("__b", "__v")
-    val joined = base.join(ra, "__a").join(rb, "__b")
-    val agg = joined.agg(count(lit(1)).as("n"),
-      sum(col("__u")).as("sum_u"), sum(col("__v")).as("sum_v"),
-      sum(col("__u") * col("__v")).as("sum_uv"),
-      sum(col("__u") * col("__u")).as("sum_u2"),
-      sum(col("__v") * col("__v")).as("sum_v2"))
-      .localCheckpoint(true)
-    sel.unpersist(false)
-    val nd = col("n").cast("double")
-    val varU = nd * col("sum_u2") - col("sum_u").cast("double") *
-      col("sum_u")
-    val varV = nd * col("sum_v2") - col("sum_v").cast("double") *
-      col("sum_v")
-    agg.select(col("n"), lit(excluded).as("n_excluded"),
-      col("sum_u"), col("sum_v"), col("sum_uv"), col("sum_u2"),
-      col("sum_v2"),
-      when(varU > 0.0 && varV > 0.0,
-        (nd * col("sum_uv") - col("sum_u").cast("double") *
-          col("sum_v")) / (sqrt(varU) * sqrt(varV)))
-        .as("rho"))
   }
 
   /** Chi-squared + mutual-information screen of a categorical
@@ -476,9 +474,9 @@ object Eval {
     val base = df
       .filter(score.isNotNull && y.isNotNull)
       .select(score.as("__s"), y.as("__y"), col(idCol).as("__id"))
-    val (ranked, cleanup) = graft.text.Sharding.exclusiveCumSumRaw(
-      base, Seq(col("__s").desc, col("__id").asc), lit(1L), "__r0")
-    val binsRows = try {
+    val binsRows = exclusiveCumSums(base,
+        Seq(col("__s").desc, col("__id").asc),
+        Seq(lit(1L) -> "__r0")) { ranked =>
       val withN = ranked.crossJoin(
         broadcast(ranked.agg(count(lit(1)).as("__N"))))
       // SQL NTILE on 1-based rank r over N rows: the first N mod b
@@ -495,7 +493,7 @@ object Eval {
         .agg(count(lit(1)).as("n"), sum(col("__y")).as("n_pos"))
         .orderBy("bin")
         .collect() // bounded: <= nBins aggregated rows
-    } finally cleanup()
+    }
     val totN = binsRows.map(_.getLong(1)).sum
     val totP = binsRows.map(_.getLong(2)).sum
     var cn = 0L; var cp = 0L

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+import graft.core.Materialize
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
 
@@ -230,10 +231,8 @@ object StreamingOps {
       emit: DataFrame => Unit): Unit = {
     // the batch feeds several actions below (emptiness, min/max agg,
     // signatures, the survivors join) — evaluate the source once
-    batch.persist()
-    try dedupIngestBatchImpl(batch, batchId, corpusText, idCol,
-      textCol, indexRoot, threshold, emit)
-    finally { batch.unpersist(false); () }
+    Materialize.scoped(batch)(dedupIngestBatchImpl(_, batchId,
+      corpusText, idCol, textCol, indexRoot, threshold, emit))
   }
 
   private def dedupIngestBatchImpl(batch: DataFrame, batchId: Long,
@@ -324,27 +323,26 @@ object StreamingOps {
     val doomed = pairs
       .filter(col("id_b") >= minBatchId)
       .select(col("id_b").as("__dead")).distinct()
-    val survivors = batch.join(doomed,
+    val survivors0 = batch.join(doomed,
       batch(idCol).cast("long") === col("__dead"), "left_anti")
-      .persist()
-    emit(survivors) // at-least-once on mid-batch crash redo
-    val survText = survivors
-      .select(col(idCol).cast("long").as(idCol), col(textCol))
-    // an all-doomed batch leaves the index UNTOUCHED: writing an
-    // empty survivors frame would publish a snapshot with zero
-    // buckets (no runs/ data for a later read to infer schema from)
-    // while absorbing nothing — skip both writes instead
-    if (!survivors.isEmpty) {
-      graft.io.SnapshotStore.write(
-        storedTexts.map(_.unionByName(survText).dropDuplicates(idCol))
-          .getOrElse(survText),
-        textsRoot, pmod(xxhash64(col(idCol)), lit(16)).cast("int"))
-      graft.dedup.MinhashIndex.appendBatch(survText,
-        idCol, textCol, indexRoot)
+    Materialize.scoped(survivors0) { survivors =>
+      emit(survivors) // at-least-once on mid-batch crash redo
+      val survText = survivors
+        .select(col(idCol).cast("long").as(idCol), col(textCol))
+      // an all-doomed batch leaves the index UNTOUCHED: writing an
+      // empty survivors frame would publish a snapshot with zero
+      // buckets (no runs/ data for a later read to infer schema from)
+      // while absorbing nothing — skip both writes instead
+      if (!survivors.isEmpty) {
+        graft.io.SnapshotStore.write(
+          storedTexts.map(_.unionByName(survText).dropDuplicates(idCol))
+            .getOrElse(survText),
+          textsRoot, pmod(xxhash64(col(idCol)), lit(16)).cast("int"))
+        graft.dedup.MinhashIndex.appendBatch(survText,
+          idCol, textCol, indexRoot)
+      }
+      writeAtomic(hwmPath, maxBatchId.toString)
     }
-    writeAtomic(hwmPath, maxBatchId.toString)
-    survivors.unpersist(false)
-    ()
   }
 
   /** Crash-safe small-file write: the recovery markers and high-water
@@ -1534,13 +1532,12 @@ object StreamingOps {
         if (!batch.isEmpty) {
           // the batch feeds banding twice (query + absorb) — evaluate
           // the source once
-          batch.persist()
-          try {
+          Materialize.scoped(batch) { batch =>
             emit(graft.multimodal.PhashIndex.batchNearDups(batch,
               idCol, phashCol, indexRoot, maxDist))
             graft.multimodal.PhashIndex.appendBatch(batch, idCol,
               phashCol, indexRoot)
-          } finally { batch.unpersist(false); () }
+          }
         }
         ()
       }
@@ -1586,8 +1583,7 @@ object StreamingOps {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
-          batch.persist()
-          try {
+          Materialize.scoped(batch) { batch =>
             val cand = graft.multimodal.PhashIndex.batchNearDups(
               batch.select(col(idCol), col(phashCol)),
               idCol, phashCol, indexRoot, maxDist)
@@ -1603,7 +1599,7 @@ object StreamingOps {
             graft.multimodal.PhashIndex.appendBatch(
               batch.select(col(idCol), col(phashCol)), idCol,
               phashCol, indexRoot)
-          } finally { batch.unpersist(false); () }
+          }
         }
         ()
       }

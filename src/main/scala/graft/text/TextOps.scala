@@ -393,7 +393,7 @@ object TextOps {
     * DESC)` — is a SINGLE-PARTITION window: the whole vocabulary
     * funnels through one task. Here the global rank is a two-phase
     * range-partitioned exclusive count, the same shape as
-    * [[graft.text.Sharding.exclusiveCumSum]]: repartitionByRange on
+    * [[graft.text.Sharding.exclusiveCumSums]]: repartitionByRange on
     * the sort key, per-partition term counts (one |partitions|-row
     * collect) become broadcast rank offsets, and a per-partition
     * window hands out local ranks. Scale-safe at any vocabulary size;
@@ -407,9 +407,8 @@ object TextOps {
       .filter(col("count") >= minCount)
     // dense rank = exclusive cumulative count of ones in the target
     // order — the shared two-phase machinery does the rest
-    val (ranked, cleanup) = graft.text.Sharding.exclusiveCumSumRaw(
-      counts, Seq(col("count").desc, col("term")), lit(1L), "id")
-    try ranked.localCheckpoint(true) finally cleanup()
+    Sharding.exclusiveCumSums(counts, Seq(col("count").desc, col("term")),
+      Seq(lit(1L) -> "id"))(graft.core.Materialize.truncate(_, eager = true))
   }
 
   /** VOCABULARY GROWTH curve (Heaps-law audit) — how many tokens
