@@ -101,14 +101,22 @@ object Flagship {
 
   /** Fit the flagship pipeline once and return it — the one-time cost a
     * production job pays before transforming arbitrarily many batches.
-    * The (column-pruned) fit input is persisted for the duration of
-    * the fit passes and dropped before returning.
     */
   def fitPipeline(spark: SparkSession, nImages: Long,
-      eventsPerImage: Int): Pipeline = {
+      eventsPerImage: Int): Pipeline =
+    fitOver(joinedInput(spark, nImages, eventsPerImage))
+
+  /** Fit a fresh flagship pipeline over `joined`. The pipeline's fit
+    * passes each re-execute their input plan, so the (column-pruned)
+    * fit input is cached for the duration of the fit passes — the as-of
+    * join + generation run a single time instead of once per fit
+    * barrier, the move a production job makes before a multi-pass fit
+    * over a 100 TB table — and released before returning. The
+    * transform plan over `joined` never reads that cache.
+    */
+  private def fitOver(joined: DataFrame): Pipeline = {
     val pipe = pipelineDef()
-    graft.core.Materialize.scoped(fitProjection(pipe,
-      joinedInput(spark, nImages, eventsPerImage)))(pipe.fit)
+    graft.core.Materialize.scoped(fitProjection(pipe, joined))(pipe.fit)
   }
 
   def features(spark: SparkSession, nImages: Long,
@@ -120,20 +128,8 @@ object Flagship {
   /** Fit + transform over a caller-supplied joined input plan (see
     * [[joinedInputFrom]] for the stored-table production shape).
     */
-  def featuresOver(joined: DataFrame): DataFrame = {
-    val pipe = pipelineDef()
-    // The pipeline's fit passes each re-execute their input plan;
-    // persist the fit projection once so the as-of join + generation
-    // run a single time instead of once per fit barrier (same move a
-    // production job makes before a multi-pass fit over a 100 TB
-    // table: cache/checkpoint the PIT-joined fit columns).
-    // (Cache stays registered so repeated fits also read it; drop it
-    // with spark.catalog.clearCache() when done.)
-    val fitInput = fitProjection(pipe, joined)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pipe.fit(fitInput)
-    pipe.transform(joined)
-  }
+  def featuresOver(joined: DataFrame): DataFrame =
+    fitOver(joined).transform(joined)
 
   /** Decode-dominated variant: the feature table joined back to the
     * image payloads, with per-image decode features extracted via the

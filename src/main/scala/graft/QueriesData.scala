@@ -131,6 +131,53 @@ object QueriesData {
     (corpus, copies.unionByName(ups).unionByName(fresh))
   }
 
+  /** `base` (an [[ImageTable.imagesReal]] table) with planted payload
+    * classes, decided by the numeric image id: with `corrupt`, every
+    * 13th payload becomes two garbage bytes; every other 20th becomes
+    * a constant-gray png of the same dims.
+    */
+  private def plantedImages(base: DataFrame, corrupt: Boolean)
+      : DataFrame = {
+    val schema = base.schema
+    val idIdx = schema.fieldIndex("image_id")
+    val bIdx = schema.fieldIndex("bytes")
+    val fIdx = schema.fieldIndex("fmt")
+    val wIdx = schema.fieldIndex("w")
+    val hIdx = schema.fieldIndex("h")
+    graft.core.Kernel.map(base, schema) { it =>
+      it.map { r =>
+        val id = r.getString(idIdx).drop(4).toLong
+        if (corrupt && id % 13 == 0)
+          org.apache.spark.sql.Row.fromSeq(
+            r.toSeq.updated(bIdx, Array[Byte](9, 9)))
+        else if (id % 20 == 0) {
+          val w = r.getInt(wIdx); val h = r.getInt(hIdx)
+          val px = Array.fill(w * h)(0xFF808080)
+          val bytes = graft.validate.PixelCheck.encode(
+            graft.validate.PixelCheck.toImage(px, w, h), "png")
+          org.apache.spark.sql.Row.fromSeq(
+            r.toSeq.updated(bIdx, bytes).updated(fIdx, "png"))
+        } else r
+      }
+    }
+  }
+
+  /** The q367/q368 image-funnel pool: 400 real-codec images with every
+    * 13th payload corrupted and every other 20th flattened to constant
+    * gray, plus a lossless png transcode copy (id + 1e6) of every 10th
+    * image that is neither.
+    */
+  private def funnelPool(s: SparkSession): DataFrame = {
+    val base = ImageTable.imagesReal(s, 400)
+    val dupClass = expr("CAST(substring(image_id, 5) AS BIGINT)")
+    val copies = Multimodal.transcode(
+      base.filter(dupClass % 13 =!= 0 && dupClass % 20 =!= 0 &&
+        dupClass % 10 === 0), "png")
+      .withColumn("image_id", format_string("img_%010d",
+        expr("CAST(substring(image_id, 5) AS BIGINT) + 1000000")))
+    plantedImages(base, corrupt = true).unionByName(copies)
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q388_supplier_profile" -> ((s, dir) => {
       // the behavioral-profile matrix's THIRD shape: supplier
@@ -823,37 +870,7 @@ object QueriesData {
       // genuinely identical renders, which it detects from the
       // dumped (w, h, phase, fmt) identity
       oracleImages(s, 400, "/tmp/graft_oracle_images_q367")
-      val base = ImageTable.imagesReal(s, 400)
-      val schema = base.schema
-      implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val idIdx = schema.fieldIndex("image_id")
-      val bIdx = schema.fieldIndex("bytes")
-      val fIdx = schema.fieldIndex("fmt")
-      val wIdx = schema.fieldIndex("w")
-      val hIdx = schema.fieldIndex("h")
-      val injected = base.mapPartitions { it =>
-        it.map { r =>
-          val id = r.getString(idIdx).drop(4).toLong
-          if (id % 13 == 0)
-            org.apache.spark.sql.Row.fromSeq(
-              r.toSeq.updated(bIdx, Array[Byte](9, 9)))
-          else if (id % 20 == 0) {
-            val w = r.getInt(wIdx); val h = r.getInt(hIdx)
-            val px = Array.fill(w * h)(0xFF808080)
-            val bytes = graft.validate.PixelCheck.encode(
-              graft.validate.PixelCheck.toImage(px, w, h), "png")
-            org.apache.spark.sql.Row.fromSeq(
-              r.toSeq.updated(bIdx, bytes).updated(fIdx, "png"))
-          } else r
-        }
-      }
-      val dupClass = expr("CAST(substring(image_id, 5) AS BIGINT)")
-      val copies = Multimodal.transcode(
-        base.filter(dupClass % 13 =!= 0 && dupClass % 20 =!= 0 &&
-          dupClass % 10 === 0), "png")
-        .withColumn("image_id", format_string("img_%010d",
-          expr("CAST(substring(image_id, 5) AS BIGINT) + 1000000")))
-      val pool = injected.unionByName(copies)
+      val pool = funnelPool(s)
       // gates 1+2: ONE decode pass flags undecodable and flat
       val audited = Multimodal.lumaStats(pool, flatStd = 2.0)
       val aliveIds = audited
@@ -874,37 +891,7 @@ object QueriesData {
       // the same composed pipeline — pool, quarantined (decode
       // gate), flat (luma gate), dedup-dropped, kept
       oracleImages(s, 400, "/tmp/graft_oracle_images_q368")
-      val base = ImageTable.imagesReal(s, 400)
-      val schema = base.schema
-      implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val idIdx = schema.fieldIndex("image_id")
-      val bIdx = schema.fieldIndex("bytes")
-      val fIdx = schema.fieldIndex("fmt")
-      val wIdx = schema.fieldIndex("w")
-      val hIdx = schema.fieldIndex("h")
-      val injected = base.mapPartitions { it =>
-        it.map { r =>
-          val id = r.getString(idIdx).drop(4).toLong
-          if (id % 13 == 0)
-            org.apache.spark.sql.Row.fromSeq(
-              r.toSeq.updated(bIdx, Array[Byte](9, 9)))
-          else if (id % 20 == 0) {
-            val w = r.getInt(wIdx); val h = r.getInt(hIdx)
-            val px = Array.fill(w * h)(0xFF808080)
-            val bytes = graft.validate.PixelCheck.encode(
-              graft.validate.PixelCheck.toImage(px, w, h), "png")
-            org.apache.spark.sql.Row.fromSeq(
-              r.toSeq.updated(bIdx, bytes).updated(fIdx, "png"))
-          } else r
-        }
-      }
-      val dupClass = expr("CAST(substring(image_id, 5) AS BIGINT)")
-      val copies = Multimodal.transcode(
-        base.filter(dupClass % 13 =!= 0 && dupClass % 20 =!= 0 &&
-          dupClass % 10 === 0), "png")
-        .withColumn("image_id", format_string("img_%010d",
-          expr("CAST(substring(image_id, 5) AS BIGINT) + 1000000")))
-      val pool = injected.unionByName(copies)
+      val pool = funnelPool(s)
       val audited = Multimodal.lumaStats(pool, flatStd = 2.0)
       val stageCounts = audited.agg(
         count(lit(1)).as("n_pool"),
@@ -2874,27 +2861,8 @@ object QueriesData {
       // on near-zero pixel variance. The oracle knows the flattened
       // ids by construction, so the operator's DECODED VERDICTS are
       // value-checked (normal synthetic renders have std_luma >> 2)
-      val base = ImageTable.imagesReal(s, 300)
-      val schema = base.schema
-      implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-      val idIdx = schema.fieldIndex("image_id")
-      val bIdx = schema.fieldIndex("bytes")
-      val fIdx = schema.fieldIndex("fmt")
-      val wIdx = schema.fieldIndex("w")
-      val hIdx = schema.fieldIndex("h")
-      val flattened = base.mapPartitions { it =>
-        it.map { r =>
-          val id = r.getString(idIdx).drop(4).toLong
-          if (id % 20 == 0) {
-            val w = r.getInt(wIdx); val h = r.getInt(hIdx)
-            val px = Array.fill(w * h)(0xFF808080)
-            val bytes = graft.validate.PixelCheck.encode(
-              graft.validate.PixelCheck.toImage(px, w, h), "png")
-            org.apache.spark.sql.Row.fromSeq(
-              r.toSeq.updated(bIdx, bytes).updated(fIdx, "png"))
-          } else r
-        }
-      }
+      val flattened = plantedImages(ImageTable.imagesReal(s, 300),
+        corrupt = false)
       Multimodal.lumaStats(flattened, flatStd = 2.0)
         .filter(col("flat"))
         .select("image_id")

@@ -1,8 +1,10 @@
 package graft.dedup
 
+import graft.core.Kernel
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types._
 
 /** Deduplication for web-scale corpora: exact, MinHash+LSH, SimHash,
   * n-gram Jaccard, embedding-cosine near-dup.
@@ -112,25 +114,13 @@ object Dedup {
     */
   private def withShingleSets(df: DataFrame, keep: Seq[Column],
       text: Column, n: Int): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.types._
     val in = df.select(keep :+ text.cast("string"): _*)
     val k = keep.size
-    val schema = StructType(in.schema.fields.take(k) :+
-      StructField("__sh", ArrayType(StringType, containsNull = false)))
-    in.mapPartitions { it =>
-      it.flatMap { r =>
-        val sh = if (r.isNullAt(k)) null else shingleSet(r.getString(k), n)
-        if (sh == null) Iterator.empty
-        else {
-          val vals = new Array[Any](k + 1)
-          var c = 0
-          while (c < k) { vals(c) = r.get(c); c += 1 }
-          vals(k) = sh.toSeq
-          Iterator.single(Row.fromSeq(vals.toIndexedSeq))
-        }
-      }
-    }(Encoders.row(schema))
+    val sh = StructField("__sh", ArrayType(StringType, containsNull = false))
+    Kernel.append(in, 0 until k, Seq(sh)) { () => r =>
+      val set = if (r.isNullAt(k)) null else shingleSet(r.getString(k), n)
+      if (set == null) null else Seq(set)
+    }
   }
 
   /** Distinct space-token n-grams of `text` in first-seen order, or
@@ -144,19 +134,52 @@ object Dedup {
       val sb = new java.lang.StringBuilder
       var p = 0
       while (p <= toks.length - n) {
-        sb.setLength(0)
-        var j = 0
-        while (j < n) {
-          if (j > 0) sb.append(' ')
-          sb.append(toks(p + j)); j += 1
-        }
-        seen.add(sb.toString); p += 1
+        seen.add(gram(toks, p, n, sb)); p += 1
       }
       val arr = new Array[String](seen.size)
       seen.toArray(arr)
       arr
     }
   }
+
+  /** The n-gram starting at token `p`: tokens `p .. p+n-1` joined by
+    * single spaces, built in the caller's reused `sb`, so the one
+    * allocation per gram is its `String`.
+    */
+  private[graft] def gram(toks: Array[String], p: Int, n: Int,
+      sb: java.lang.StringBuilder): String = {
+    sb.setLength(0)
+    var j = 0
+    while (j < n) {
+      if (j > 0) sb.append(' ')
+      sb.append(toks(p + j)); j += 1
+    }
+    sb.toString
+  }
+
+  /** |a ∩ b| of two distinct string sets: `set` hashes one side and
+    * every element of the other probes it.
+    */
+  private def sharedCount(set: java.util.HashSet[String],
+      probe: scala.collection.Seq[String]): Int = {
+    var n = 0
+    probe.foreach(t => if (set.contains(t)) n += 1)
+    n
+  }
+
+  private def hashSetOf(xs: scala.collection.Seq[String])
+      : java.util.HashSet[String] = {
+    val s = new java.util.HashSet[String](xs.size * 2)
+    xs.foreach(s.add)
+    s
+  }
+
+  /** |a ∩ b| of two distinct sets: hash the smaller, probe with the
+    * larger.
+    */
+  private def intersectionSize(a: Seq[String], b: Seq[String]): Int =
+    if (a.size <= b.size) sharedCount(hashSetOf(a), b)
+    else sharedCount(hashSetOf(b), a)
 
   /** Per-document MinHash signature table `(id, mh0..mh{numHashes-1})`,
     * computed by a PER-PARTITION JVM KERNEL (round 6): each document's
@@ -183,63 +206,44 @@ object Dedup {
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 32): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.types._
     import org.apache.spark.sql.catalyst.expressions.{XXH64, XxHash64Function}
     import org.apache.spark.unsafe.types.UTF8String
-    val in = df.select(col(idCol), col(textCol).cast("string"))
-    val idf = in.schema.head
-    val schema = StructType(
-      StructField("__id", idf.dataType, idf.nullable) +:
-        (0 until numHashes).map(s =>
-          StructField(s"mh$s", LongType, nullable = false)))
+    val in = df.select(col(idCol).as("__id"), col(textCol).cast("string"))
     val (n, k) = (shingleSize, numHashes)
-    in.mapPartitions { it =>
-      it.flatMap { r =>
+    Kernel.append(in, Seq(0), (0 until numHashes).map(s =>
+      StructField(s"mh$s", LongType, nullable = false))) { () =>
+      val sb = new java.lang.StringBuilder
+      r => {
         val text = if (r.isNullAt(1)) null else r.getString(1)
-        if (text == null) Iterator.empty
+        val toks = if (text == null) null else text.split(" ", -1)
+        if (toks == null || toks.length < n) null
         else {
-          val toks = text.split(" ", -1)
-          if (toks.length < n) Iterator.empty
-          else {
-            // per-document kernel (round 6): shingle strings, one
-            // xxhash64 per shingle, k seed-rehashes folding into
-            // running minima — bit-identical to the relational
-            // min(xxhash64(xxhash64(shingle), seed)) aggregation
-            // (XxHash64Function/XXH64 are the exact evaluators behind
-            // the SQL xxhash64), but with no posexplode, no window
-            // exchange/sort, and a |docs|-row output instead of a
-            // token-row shuffle.
-            val mins = Array.fill(k)(Long.MaxValue)
-            val sb = new java.lang.StringBuilder
-            var p = 0
-            while (p <= toks.length - n) {
-              sb.setLength(0)
-              var j = 0
-              while (j < n) {
-                if (j > 0) sb.append(' ')
-                sb.append(toks(p + j)); j += 1
-              }
-              val u = XxHash64Function.hash(
-                UTF8String.fromString(sb.toString), StringType, 42L)
-              val hu = XXH64.hashLong(u, 42L)
-              var s = 0
-              while (s < k) {
-                val h = XXH64.hashInt(s, hu)
-                if (h < mins(s)) mins(s) = h
-                s += 1
-              }
-              p += 1
-            }
-            val vals = new Array[Any](1 + k)
-            vals(0) = r.get(0)
+          // per-document kernel (round 6): shingle strings, one
+          // xxhash64 per shingle, k seed-rehashes folding into
+          // running minima — bit-identical to the relational
+          // min(xxhash64(xxhash64(shingle), seed)) aggregation
+          // (XxHash64Function/XXH64 are the exact evaluators behind
+          // the SQL xxhash64), but with no posexplode, no window
+          // exchange/sort, and a |docs|-row output instead of a
+          // token-row shuffle.
+          val mins = Array.fill(k)(Long.MaxValue)
+          var p = 0
+          while (p <= toks.length - n) {
+            val u = XxHash64Function.hash(
+              UTF8String.fromString(gram(toks, p, n, sb)), StringType, 42L)
+            val hu = XXH64.hashLong(u, 42L)
             var s = 0
-            while (s < k) { vals(1 + s) = mins(s); s += 1 }
-            Iterator.single(Row.fromSeq(vals.toIndexedSeq))
+            while (s < k) {
+              val h = XXH64.hashInt(s, hu)
+              if (h < mins(s)) mins(s) = h
+              s += 1
+            }
+            p += 1
           }
+          scala.collection.immutable.ArraySeq.unsafeWrapArray(mins)
         }
       }
-    }(Encoders.row(schema))
+    }
   }
 
   /** `(__id, band, bh)` LSH band-bucket rows: each `rows`-wide
@@ -303,26 +307,15 @@ object Dedup {
     * (id_a, sh_a, id_b, sh_b); output (id_a, id_b, jaccard).
     */
   private[graft] def jaccardOfPairs(pairs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.types._
     val in = pairs.select(col("id_a"), col("id_b"),
       col("sh_a"), col("sh_b"))
-    val schema = StructType(Seq(
-      in.schema("id_a"), in.schema("id_b"),
-      StructField("jaccard", DoubleType, nullable = true)))
-    in.mapPartitions { it =>
-      it.map { r =>
-        val a = r.getSeq[String](2)
-        val b = r.getSeq[String](3)
-        val (small, large) = if (a.size <= b.size) (a, b) else (b, a)
-        val set = new java.util.HashSet[String](small.size * 2)
-        small.foreach(set.add)
-        var inter = 0
-        large.foreach(t => if (set.contains(t)) inter += 1)
-        val i = inter.toDouble
-        Row(r.get(0), r.get(1), i / ((a.size + b.size) - i))
-      }
-    }(Encoders.row(schema))
+    Kernel.append(in, Seq(0, 1),
+      Seq(StructField("jaccard", DoubleType, nullable = true))) { () => r =>
+      val a = r.getSeq[String](2)
+      val b = r.getSeq[String](3)
+      val i = intersectionSize(a, b).toDouble
+      Seq(i / ((a.size + b.size) - i))
+    }
   }
 
   /** Exact shingle-Jaccard verification of candidate pairs against a
@@ -431,14 +424,12 @@ object Dedup {
     * by `__id` within a partition; output `(id_a, id_b, jaccard)`.
     */
   private def blockPairs(units: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.types._
     val idf = units.schema("__id")
     val schema = StructType(Seq(
       StructField("id_a", idf.dataType, idf.nullable),
       StructField("id_b", idf.dataType, idf.nullable),
       StructField("jaccard", DoubleType, nullable = true)))
-    units.mapPartitions { rows =>
+    Kernel.map(units, schema) { rows =>
       val in = rows.buffered
       new Iterator[Iterator[Row]] {
         def hasNext: Boolean = in.hasNext
@@ -450,7 +441,7 @@ object Dedup {
           runPairs(run.result())
         }
       }.flatten
-    }(Encoders.row(schema))
+    }
   }
 
   /** All pairs of one run: `i < j` in id order, equal ids skipped, and
@@ -470,23 +461,17 @@ object Dedup {
     }
     val sets = new Array[java.util.HashSet[String]](m)
     def setOf(k: Int): java.util.HashSet[String] = {
-      if (sets(k) == null) {
-        val s = new java.util.HashSet[String](sh(k).length * 2)
-        sh(k).foreach(s.add)
-        sets(k) = s
-      }
+      if (sets(k) == null) sets(k) = hashSetOf(sh(k))
       sets(k)
     }
-    // probe the larger set with the smaller array (the count is the
-    // same either way); same arithmetic as [[jaccardOfPairs]], so the
-    // doubles are bit-identical
+    // probe the larger set, hashed once per document, with the
+    // smaller array (the count is the same either way); same
+    // arithmetic as [[jaccardOfPairs]], so the doubles are
+    // bit-identical
     def jaccard(a: Int, b: Int): Double = {
       val (small, large) =
         if (sh(a).length <= sh(b).length) (a, b) else (b, a)
-      val set = setOf(large)
-      var inter = 0
-      sh(small).foreach(t => if (set.contains(t)) inter += 1)
-      val x = inter.toDouble
+      val x = sharedCount(setOf(large), sh(small)).toDouble
       x / ((sh(a).length + sh(b).length) - x)
     }
     Iterator.range(0, m).flatMap { a =>
@@ -607,28 +592,15 @@ object Dedup {
         Seq("id_a"))
       .join(sets.select(col("__id").as("id_b"), col("__sh").as("__sb")),
         Seq("id_b"))
-    val both = locally {
-      import org.apache.spark.sql.Encoders
-      import org.apache.spark.sql.types._
-      val in = joined.select(col("id_a"), col("id_b"),
-        col("__sa"), col("__sb"))
-      val schema = StructType(Seq(
-        in.schema("id_a"), in.schema("id_b"),
+    val both = Kernel.append(
+      joined.select(col("id_a"), col("id_b"), col("__sa"), col("__sb")),
+      Seq(0, 1), Seq(
         StructField("__shared", DoubleType, nullable = false),
         StructField("__na", IntegerType, nullable = false),
-        StructField("__nb", IntegerType, nullable = false)))
-      in.mapPartitions { it =>
-        it.map { r =>
-          val a = r.getSeq[String](2)
-          val b = r.getSeq[String](3)
-          val (small, large) = if (a.size <= b.size) (a, b) else (b, a)
-          val set = new java.util.HashSet[String](small.size * 2)
-          small.foreach(set.add)
-          var inter = 0
-          large.foreach(t => if (set.contains(t)) inter += 1)
-          Row(r.get(0), r.get(1), inter.toDouble, a.size, b.size)
-        }
-      }(Encoders.row(schema))
+        StructField("__nb", IntegerType, nullable = false))) { () => r =>
+      val a = r.getSeq[String](2)
+      val b = r.getSeq[String](3)
+      Seq[Any](intersectionSize(a, b).toDouble, a.size, b.size)
     }
     // ONE verify-join pass emits BOTH directions (a 2-array explode),
     // instead of a union of two selects that would execute the join —

@@ -122,16 +122,12 @@ object ImageTable {
     val wIdx = base.schema.fieldIndex("w")
     val hIdx = base.schema.fieldIndex("h")
     val fIdx = base.schema.fieldIndex("fmt")
-    implicit val enc = org.apache.spark.sql.Encoders.row(schema)
-    base.mapPartitions { it =>
+    graft.core.Kernel.map(base, schema) { it =>
       // ONE codec per partition: writer + param + 4:4:4 metadata reused
       // across every image (per-image registry lookups and DOM metadata
-      // rebuilds are codec overhead AND cross-thread contention).
-      // Cleanup via the task-completion listener, which fires even when
-      // the iterator is abandoned early (limit, take, task kill)
-      val codec = new graft.validate.PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
+      // rebuilds are codec overhead AND cross-thread contention)
+      val codec = graft.core.Kernel.perTask(
+        new graft.validate.PixelCheck.Codec)
       it.map { r =>
         val id = r.getLong(idIdx)
         val w = r.getInt(wIdx); val hh = r.getInt(hIdx)

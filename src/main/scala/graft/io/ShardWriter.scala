@@ -57,8 +57,7 @@ object ShardWriter {
         StructField("members", LongType, nullable = false),
         StructField("payload_bytes", LongType, nullable = false),
         StructField("file", StringType, nullable = false)))
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    arranged.mapPartitions { it =>
+    graft.core.Kernel.map(arranged, outSchema) { it =>
       val done = scala.collection.mutable.ArrayBuffer[Row]()
       var curKey: Seq[Any] = null
       var ch: java.nio.channels.FileChannel = null
@@ -114,8 +113,7 @@ object ShardWriter {
       StructField("file", StringType, nullable = false),
       StructField("id", LongType, nullable = false),
       StructField("size", LongType, nullable = false)))
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    files.mapPartitions { it =>
+    graft.core.Kernel.map(files, outSchema) { it =>
       it.flatMap { r =>
         val path = r.getString(0)
         val bytes = r.getAs[Array[Byte]](1)

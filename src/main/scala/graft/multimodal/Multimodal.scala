@@ -1,17 +1,20 @@
 package graft.multimodal
 
+import graft.core.Kernel
 import graft.validate.PixelCheck
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import java.awt.image.BufferedImage
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal (image/audio/video-as-binary) column processing.
   *
   * Payloads stay opaque `binary` columns with typed metadata alongside
-  * (input_hint schema). Decode / feature-extract / resize run as
-  * `mapPartitions` over the typed rows — the Scala analogue of the
-  * mapInPandas batch-UDF shape: one decoder instance per partition,
-  * rows streamed through it, output schema declared up front.
+  * (input_hint schema). Every pixel op (decode / feature-extract /
+  * resize / re-encode) is a [[graft.core.Kernel]] partition map over
+  * the rows — the Scala analogue of the mapInPandas batch-UDF shape —
+  * inside the one decode-and-quarantine frame below, so each op keeps
+  * only its pixel arithmetic, its output fields and its fallback.
   *
   * The heavy codec is pluggable: `ImageIoDecoder` is a real JVM decoder
   * (javax.imageio — PNG/JPEG); `StubDecoder` is the clearly-marked
@@ -21,9 +24,7 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Per-payload decode result: tiny numeric features, never pixels —
-    * pixel buffers die inside the partition, only features shuffle.
-    */
+  /** Per-payload decode result: tiny numeric features, never pixels. */
   case class ImageFeatures(
       decodedW: Int, decodedH: Int, meanLuma: Double, ok: Boolean)
 
@@ -40,20 +41,18 @@ object Multimodal {
         val img = PixelCheck.decode(bytes)
         if (img == null) ImageFeatures(-1, -1, Double.NaN, ok = false)
         else {
-          var luma = 0.0
+          var sum = 0.0
           var y = 0
           while (y < img.getHeight) {
             var x = 0
             while (x < img.getWidth) {
-              val p = img.getRGB(x, y)
-              luma += 0.299 * ((p >> 16) & 0xff) +
-                0.587 * ((p >> 8) & 0xff) + 0.114 * (p & 0xff)
+              sum += luma(img.getRGB(x, y))
               x += 1
             }
             y += 1
           }
           ImageFeatures(img.getWidth, img.getHeight,
-            luma / (img.getWidth.toLong * img.getHeight), ok = true)
+            sum / (img.getWidth.toLong * img.getHeight), ok = true)
         }
       case other => StubDecoder.decode(bytes, other, declaredW, declaredH)
     }
@@ -121,6 +120,126 @@ object Multimodal {
     }
   }
 
+  // ---- the decode-and-quarantine frame -------------------------------
+  //
+  // One codec per partition, pixels die inside it, and a failure is a
+  // row, not a dead job. Every pixel op runs in this frame:
+  //   - the codec's per-format readers and writers are built once per
+  //     partition and reused across its rows ([[Payloads]]);
+  //   - pixel buffers never leave the partition: a FEATURE op
+  //     ([[features]], [[imageFeatures]]) emits scalars and drops
+  //     `bytes`, a REWRITE op ([[rewrite]]) emits the re-encoded payload;
+  //   - at 10^12 rows a corrupt payload is a row you quarantine, not a
+  //     job you kill: a null payload counts as empty, and an empty or
+  //     undecodable payload, or an exception in the op, gives the
+  //     feature op's fallback values or passes the rewrite op's row
+  //     through unchanged.
+
+  /** Per-partition payload access: the codec opens on first use and
+    * closes with the task ([[Kernel.perTask]]), also when the iterator
+    * is abandoned early.
+    */
+  private final class Payloads {
+    private lazy val codec = Kernel.perTask(new PixelCheck.Codec)
+
+    /** The payload at `i`; a null payload counts as empty. */
+    def bytes(r: Row, i: Int): Array[Byte] =
+      if (r.isNullAt(i)) Array.emptyByteArray else r.getAs[Array[Byte]](i)
+
+    /** The decoded image, or null when the payload is empty, does not
+      * decode, or makes the decoder throw (a truncated stream after a
+      * valid magic). A null `fmt` decodes by content sniffing.
+      */
+    def image(r: Row, bytesIdx: Int, fmtIdx: Int): BufferedImage =
+      try {
+        val b = bytes(r, bytesIdx)
+        if (b.isEmpty) null else codec.decode(b, r.getString(fmtIdx))
+      } catch { case _: Exception => null }
+
+    def encode(img: BufferedImage, fmt: String): Array[Byte] =
+      codec.encode(img, fmt)
+  }
+
+  /** The frame of a FEATURE op: `feature` maps each row (with the
+    * partition's [[Payloads]] and the `bytes`/`fmt` indices) to the
+    * op's values for `fields`, and any exception in it yields
+    * `fallback` instead. The output keeps every column but `bytes`:
+    * re-serialising the payload into every output row is a pure memcpy
+    * tax (it saturates memory bandwidth long before the decode math
+    * saturates cores).
+    */
+  private def features(df: DataFrame, fields: Seq[StructField],
+      fallback: Seq[Any])(feature: (Row, Payloads, Int, Int) => Seq[Any])
+      : DataFrame = {
+    val bytesIdx = df.schema.fieldIndex("bytes")
+    val fmtIdx = df.schema.fieldIndex("fmt")
+    Kernel.append(df, df.schema.fields.indices.filterNot(_ == bytesIdx),
+      fields) { () =>
+      val px = new Payloads
+      r => try feature(r, px, bytesIdx, fmtIdx)
+        catch { case _: Exception => fallback }
+    }
+  }
+
+  /** A feature op over the decoded image: an empty or undecodable
+    * payload gives `fallback`, as does an exception in `feature`.
+    */
+  private def imageFeatures(df: DataFrame, fields: Seq[StructField],
+      fallback: Seq[Any])(feature: (Row, BufferedImage) => Seq[Any])
+      : DataFrame =
+    features(df, fields, fallback) { (r, px, bytesIdx, fmtIdx) =>
+      val img = px.image(r, bytesIdx, fmtIdx)
+      if (img == null) fallback else feature(r, img)
+    }
+
+  /** The frame of a REWRITE op, which re-encodes `bytes` in place as
+    * `fmt` and keeps every column. `plan` reads a row's plan OUTSIDE
+    * the quarantine (a malformed plan fails the job) and returns the
+    * pixel transform, or null to pass the row through; the transform
+    * returns the image to encode, or null to pass the row through. A
+    * payload that does not decode, or a transform or encoder that
+    * throws, passes the row through unchanged (quarantine first with
+    * [[auditPayloads]] if that matters). With `setDims`, `w`/`h` take
+    * the encoded image's dimensions.
+    */
+  private def rewrite(df: DataFrame, fmt: String, setDims: Boolean)(
+      plan: Row => BufferedImage => BufferedImage): DataFrame = {
+    val s = df.schema
+    val bytesIdx = s.fieldIndex("bytes")
+    val fmtIdx = s.fieldIndex("fmt")
+    val dimsIdx =
+      if (setDims) Some((s.fieldIndex("w"), s.fieldIndex("h"))) else None
+    Kernel.map(df, s) { it =>
+      val px = new Payloads
+      it.map { r =>
+        val draw = plan(r)
+        val done: (BufferedImage, Array[Byte]) =
+          if (draw == null) null
+          else try {
+            val img = px.image(r, bytesIdx, fmtIdx)
+            val out = if (img == null) null else draw(img)
+            if (out == null) null else (out, px.encode(out, fmt))
+          } catch { case _: Exception => null }
+        if (done == null) r
+        else {
+          val v = Array.tabulate[Any](r.length)(r.get)
+          v(bytesIdx) = done._2
+          v(fmtIdx) = fmt
+          dimsIdx.foreach { case (wi, hi) =>
+            v(wi) = done._1.getWidth; v(hi) = done._1.getHeight }
+          Row.fromSeq(v.toSeq)
+        }
+      }
+    }
+  }
+
+  /** Rec. 601 luma of a packed RGB pixel. */
+  private def luma(p: Int): Double =
+    0.299 * ((p >> 16) & 0xff) + 0.587 * ((p >> 8) & 0xff) +
+      0.114 * (p & 0xff)
+
+  // ---- pixel ops ------------------------------------------------------
+
   private val FeatureFields = Seq(
     StructField("decoded_w", IntegerType),
     StructField("decoded_h", IntegerType),
@@ -128,42 +247,20 @@ object Multimodal {
     StructField("decode_ok", BooleanType))
 
   /** Attach decode features to an image table
-    * (bytes/fmt/w/h per input_hint). The batch shape: one decoder per
-    * partition, streaming iterator, no pixel buffers escape — and the
-    * PAYLOAD DOES NOT PASS THROUGH: re-serialising the binary column
-    * into every output row is a pure memcpy tax (it saturates memory
-    * bandwidth long before the decode math saturates cores). The output
-    * keeps every non-payload column + the four feature columns.
+    * (bytes/fmt/w/h per input_hint): every non-payload column + the four
+    * feature columns. The pluggable `decoder` gets each payload (null
+    * as empty) and reports its own failure row; a decoder exception
+    * (truncated-after-valid-magic stream, null w/h) gives
+    * (-1, -1, NaN, false).
     */
   def withDecodeFeatures(df: DataFrame, decoder: Decoder): DataFrame = {
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val keptIdx = inSchema.fields.indices.filterNot(_ == bytesIdx)
-    val outSchema = StructType(
-      keptIdx.map(inSchema.fields) ++ FeatureFields)
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val wIdx = inSchema.fieldIndex("w")
-    val hIdx = inSchema.fieldIndex("h")
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      it.map { r =>
-        // null payload behaves like an empty one; a decoder exception
-        // (truncated-after-valid-magic stream, null w/h) is a ROW you
-        // quarantine (ok=false), not a job you kill — the same per-row
-        // discipline as auditPayloads/averageHash/lumaStats
-        val f =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            decoder.decode(bytes,
-              r.getString(fmtIdx), r.getInt(wIdx), r.getInt(hIdx))
-          } catch {
-            case _: Exception =>
-              ImageFeatures(-1, -1, Double.NaN, ok = false)
-          }
-        Row.fromSeq(keptIdx.map(r.get) ++
-          Seq(f.decodedW, f.decodedH, f.meanLuma, f.ok))
-      }
+    val wIdx = df.schema.fieldIndex("w")
+    val hIdx = df.schema.fieldIndex("h")
+    features(df, FeatureFields, Seq(-1, -1, Double.NaN, false)) {
+      (r, px, bytesIdx, fmtIdx) =>
+        val f = decoder.decode(px.bytes(r, bytesIdx),
+          r.getString(fmtIdx), r.getInt(wIdx), r.getInt(hIdx))
+        Seq(f.decodedW, f.decodedH, f.meanLuma, f.ok)
     }
   }
 
@@ -195,63 +292,36 @@ object Multimodal {
     *   - psnr_db                — decoded vs expected (Infinity = exact)
     *   - pixels_ok              — png: exact pixel equality (allclose
     *                              at tolerance 0); jpeg: PSNR >= minPsnrDb
-    * Decode failures / null payloads / dimension mismatches audit
-    * `false`, never throw — at 10^12 rows a corrupt payload is a row
-    * you quarantine, not a job you kill. Pixel buffers and payloads die
-    * inside the partition; the shuffle carries 4 scalars per row.
+    * Decode failures / null payloads audit (-1, -1, NaN, false) and
+    * dimension mismatches audit `false`, never throw. The shuffle
+    * carries 4 scalars per row.
     */
   def auditPayloads(df: DataFrame, seed: Long,
       minPsnrDb: Double = 40.0): DataFrame = {
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val keptIdx = inSchema.fields.indices.filterNot(_ == bytesIdx)
-    val outSchema = StructType(keptIdx.map(inSchema.fields) ++ Seq(
+    val idIdx = df.schema.fieldIndex("image_id")
+    val fmtIdx = df.schema.fieldIndex("fmt")
+    val wIdx = df.schema.fieldIndex("w")
+    val hIdx = df.schema.fieldIndex("h")
+    imageFeatures(df, Seq(
       StructField("decoded_w", IntegerType),
       StructField("decoded_h", IntegerType),
       StructField("psnr_db", DoubleType),
-      StructField("pixels_ok", BooleanType)))
-    val idIdx = inSchema.fieldIndex("image_id")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val wIdx = inSchema.fieldIndex("w")
-    val hIdx = inSchema.fieldIndex("h")
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      // one codec per partition: per-format readers reused across rows;
-      // cleanup via the task-completion listener (fires even when the
-      // iterator is abandoned early)
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        val kept = keptIdx.map(r.get)
-        val audit: Seq[Any] =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            val img = if (bytes.isEmpty) null
-              else codec.decode(bytes, r.getString(fmtIdx))
-            if (img == null) Seq(-1, -1, Double.NaN, false)
-            else {
-              val w = r.getInt(wIdx); val hh = r.getInt(hIdx)
-              val id = r.getString(idIdx).substring(4).toLong
-              if (img.getWidth != w || img.getHeight != hh)
-                Seq(img.getWidth, img.getHeight, Double.NaN, false)
-              else {
-                val expected = PixelCheck.toImage(
-                  PixelCheck.syntheticPixels(
-                    graft.io.ImageTable.pixelSeed(seed, id), w, hh), w, hh)
-                val p = PixelCheck.psnr(expected, img)
-                val ok = r.getString(fmtIdx) match {
-                  case "png" => p.isPosInfinity
-                  case _ => p >= minPsnrDb
-                }
-                Seq(img.getWidth, img.getHeight, p, ok)
-              }
-            }
-          } catch {
-            case _: Exception => Seq(-1, -1, Double.NaN, false)
-          }
-        Row.fromSeq(kept ++ audit)
+      StructField("pixels_ok", BooleanType)),
+      Seq(-1, -1, Double.NaN, false)) { (r, img) =>
+      val w = r.getInt(wIdx); val hh = r.getInt(hIdx)
+      val id = r.getString(idIdx).substring(4).toLong
+      if (img.getWidth != w || img.getHeight != hh)
+        Seq(img.getWidth, img.getHeight, Double.NaN, false)
+      else {
+        val expected = PixelCheck.toImage(
+          PixelCheck.syntheticPixels(
+            graft.io.ImageTable.pixelSeed(seed, id), w, hh), w, hh)
+        val p = PixelCheck.psnr(expected, img)
+        val ok = r.getString(fmtIdx) match {
+          case "png" => p.isPosInfinity
+          case _ => p >= minPsnrDb
+        }
+        Seq(img.getWidth, img.getHeight, p, ok)
       }
     }
   }
@@ -267,171 +337,101 @@ object Multimodal {
     * identically regardless of container format (q124 exploits this
     * for a value-exact oracle).
     *
-    * Same partition discipline as the audit: one codec per partition,
-    * payload and pixels die inside it, 1 long + ok flag leave.
+    * Undecodable payloads give (0, false).
     */
-  def averageHash(df: DataFrame): DataFrame = {
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val keptIdx = inSchema.fields.indices.filterNot(_ == bytesIdx)
-    val outSchema = StructType(keptIdx.map(inSchema.fields) ++ Seq(
+  def averageHash(df: DataFrame): DataFrame =
+    imageFeatures(df, Seq(
       StructField("ahash", LongType),
-      StructField("ahash_ok", BooleanType)))
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        val kept = keptIdx.map(r.get)
-        val hash: Seq[Any] =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            val img = if (bytes.isEmpty) null
-              else codec.decode(bytes, r.getString(fmtIdx))
-            if (img == null) Seq(0L, false)
-            else {
-              val w = img.getWidth; val h = img.getHeight
-              val cells = new Array[Double](64)
-              var i = 0
-              while (i < 8) {
-                val y0 = i * h / 8; val y1 = math.max((i + 1) * h / 8, y0 + 1)
-                var j = 0
-                while (j < 8) {
-                  val x0 = j * w / 8
-                  val x1 = math.max((j + 1) * w / 8, x0 + 1)
-                  var s = 0.0; var n = 0
-                  var y = y0
-                  while (y < math.min(y1, h)) {
-                    var x = x0
-                    while (x < math.min(x1, w)) {
-                      val p = img.getRGB(x, y)
-                      s += 0.299 * ((p >> 16) & 0xff) +
-                        0.587 * ((p >> 8) & 0xff) + 0.114 * (p & 0xff)
-                      n += 1; x += 1
-                    }
-                    y += 1
-                  }
-                  cells(i * 8 + j) = if (n > 0) s / n else 0.0
-                  j += 1
-                }
-                i += 1
-              }
-              val mean = cells.sum / 64
-              var bits = 0L
-              var k = 0
-              while (k < 64) {
-                if (cells(k) > mean) bits |= (1L << (63 - k))
-                k += 1
-              }
-              Seq(bits, true)
-            }
-          } catch { case _: Exception => Seq(0L, false) }
-        Row.fromSeq(kept ++ hash)
-      }
+      StructField("ahash_ok", BooleanType)), Seq(0L, false)) { (_, img) =>
+      Seq(aHash(img, 0, 0, img.getWidth, img.getHeight), true)
     }
+
+  /** Mean luma of each cell of a `rows`×`cols` grid over the `w`×`h`
+    * region at (`x0`, `y0`), row-major: cell (i, j) averages rows
+    * [i*h/rows, (i+1)*h/rows) x cols [j*w/cols, (j+1)*w/cols) of the
+    * region, each at least one pixel wide — deterministic integer
+    * bounds, no resampling kernel.
+    */
+  private def cellMeans(img: BufferedImage, x0: Int, y0: Int, w: Int,
+      h: Int, rows: Int, cols: Int): Array[Double] = {
+    val cells = new Array[Double](rows * cols)
+    var i = 0
+    while (i < rows) {
+      val cy0 = i * h / rows
+      val cy1 = math.max((i + 1) * h / rows, cy0 + 1)
+      var j = 0
+      while (j < cols) {
+        val cx0 = j * w / cols
+        val cx1 = math.max((j + 1) * w / cols, cx0 + 1)
+        var s = 0.0; var n = 0
+        var y = cy0
+        while (y < math.min(cy1, h)) {
+          var x = cx0
+          while (x < math.min(cx1, w)) {
+            s += luma(img.getRGB(x0 + x, y0 + y))
+            n += 1; x += 1
+          }
+          y += 1
+        }
+        cells(i * cols + j) = if (n > 0) s / n else 0.0
+        j += 1
+      }
+      i += 1
+    }
+    cells
   }
+
+  /** The 64-bit aHash of the `w`×`h` region at (`x0`, `y0`): its 8x8
+    * cell means thresholded against their mean, row-major, bit 63 =
+    * top-left. A region hashes exactly as the same pixels cropped to a
+    * standalone image.
+    */
+  private def aHash(img: BufferedImage, x0: Int, y0: Int, w: Int,
+      h: Int): Long = {
+    val cells = cellMeans(img, x0, y0, w, h, 8, 8)
+    val mean = cells.sum / 64
+    var bits = 0L
+    var k = 0
+    while (k < 64) {
+      if (cells(k) > mean) bits |= (1L << (63 - k))
+      k += 1
+    }
+    bits
+  }
+
+  /** The `grid`×`grid` tiling of a `w`×`h` image, row-major: each
+    * tile's (x0, y0, width, height), every tile at least one pixel.
+    */
+  private def tiles(w: Int, h: Int, grid: Int): Seq[(Int, Int, Int, Int)] =
+    for (ty <- 0 until grid; tx <- 0 until grid) yield {
+      val ty0 = ty * h / grid
+      val th = math.min(math.max((ty + 1) * h / grid, ty0 + 1), h) - ty0
+      val tx0 = tx * w / grid
+      val tw = math.min(math.max((tx + 1) * w / grid, tx0 + 1), w) - tx0
+      (tx0, ty0, tw, th)
+    }
 
   /** Per-TILE average hash — [[averageHash]] computed independently
     * on each cell of a `grid`×`grid` tiling of the decoded image
     * (`tile_hashes: Array[Long]`, row-major, + `tiles_ok`). A crop of
     * tile (i,j) re-encoded losslessly hashes IDENTICALLY to entry
-    * i·grid+j (the tile-relative cell bounds below replay
-    * [[averageHash]]'s integer bounds on the standalone crop), which
-    * is what makes crop-resistant near-dup possible: a quadrant
-    * steal, watermark crop, or thumbnail-of-a-region matches its
-    * source through [[cropNearDups]] even though the FULL-image
-    * hashes differ in ~half their bits.
-    *
-    * Same partition discipline as every codec op here: one
-    * partition-reused codec, payload bytes and pixels die inside the
-    * partition, grid² longs + ok flag leave.
+    * i·grid+j (each tile replays [[averageHash]]'s integer bounds as
+    * if it were a standalone crop; at grid 1 the one tile IS the
+    * image), which is what makes crop-resistant near-dup possible: a
+    * quadrant steal, watermark crop, or thumbnail-of-a-region matches
+    * its source through [[cropNearDups]] even though the FULL-image
+    * hashes differ in ~half their bits. Undecodable payloads give
+    * grid² zeros and `tiles_ok = false`.
     */
   def tileAverageHash(df: DataFrame, grid: Int = 2): DataFrame = {
     require(grid >= 1 && grid <= 8,
       s"tileAverageHash: grid in [1,8], got $grid")
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val keptIdx = inSchema.fields.indices.filterNot(_ == bytesIdx)
-    val outSchema = StructType(keptIdx.map(inSchema.fields) ++ Seq(
+    imageFeatures(df, Seq(
       StructField("tile_hashes", ArrayType(LongType, false)),
-      StructField("tiles_ok", BooleanType)))
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        val kept = keptIdx.map(r.get)
-        val out: Seq[Any] =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            val img = if (bytes.isEmpty) null
-              else codec.decode(bytes, r.getString(fmtIdx))
-            if (img == null) Seq(Array.fill(grid * grid)(0L), false)
-            else {
-              val w = img.getWidth; val h = img.getHeight
-              val hashes = new Array[Long](grid * grid)
-              var ty = 0
-              while (ty < grid) {
-                val ty0 = ty * h / grid
-                val ty1 = math.max((ty + 1) * h / grid, ty0 + 1)
-                val th = math.min(ty1, h) - ty0
-                var tx = 0
-                while (tx < grid) {
-                  val tx0 = tx * w / grid
-                  val tx1 = math.max((tx + 1) * w / grid, tx0 + 1)
-                  val tw = math.min(tx1, w) - tx0
-                  // [[averageHash]]'s exact integer cell bounds on a
-                  // standalone tw×th image, offset by the tile origin
-                  val cells = new Array[Double](64)
-                  var i = 0
-                  while (i < 8) {
-                    val y0 = i * th / 8
-                    val y1 = math.max((i + 1) * th / 8, y0 + 1)
-                    var j = 0
-                    while (j < 8) {
-                      val x0 = j * tw / 8
-                      val x1 = math.max((j + 1) * tw / 8, x0 + 1)
-                      var s = 0.0; var n = 0
-                      var y = y0
-                      while (y < math.min(y1, th)) {
-                        var x = x0
-                        while (x < math.min(x1, tw)) {
-                          val p = img.getRGB(tx0 + x, ty0 + y)
-                          s += 0.299 * ((p >> 16) & 0xff) +
-                            0.587 * ((p >> 8) & 0xff) + 0.114 * (p & 0xff)
-                          n += 1; x += 1
-                        }
-                        y += 1
-                      }
-                      cells(i * 8 + j) = if (n > 0) s / n else 0.0
-                      j += 1
-                    }
-                    i += 1
-                  }
-                  val mean = cells.sum / 64
-                  var bits = 0L
-                  var k = 0
-                  while (k < 64) {
-                    if (cells(k) > mean) bits |= (1L << (63 - k))
-                    k += 1
-                  }
-                  hashes(ty * grid + tx) = bits
-                  tx += 1
-                }
-                ty += 1
-              }
-              Seq(hashes, true)
-            }
-          } catch { case _: Exception =>
-            Seq(Array.fill(grid * grid)(0L), false) }
-        Row.fromSeq(kept ++ out)
-      }
+      StructField("tiles_ok", BooleanType)),
+      Seq(Array.fill(grid * grid)(0L), false)) { (_, img) =>
+      Seq(tiles(img.getWidth, img.getHeight, grid).map {
+        case (x0, y0, w, h) => aHash(img, x0, y0, w, h) }.toArray, true)
     }
   }
 
@@ -443,73 +443,35 @@ object Multimodal {
     * and matches iff the DECODED tile pixels are bit-identical —
     * the right tool for lossless-pipeline crop detection
     * ([[cropExactDups]]): a losslessly re-encoded crop of tile
-    * (i,j) fingerprints identically to entry i·grid+j. Same
-    * partition discipline as every codec op here (grid² longs + ok
-    * flag leave the partition; pixels die inside).
+    * (i,j) fingerprints identically to entry i·grid+j. Undecodable
+    * payloads give grid² zeros and `tiles_ok = false`.
     */
   def tileFingerprint(df: DataFrame, grid: Int = 2): DataFrame = {
     require(grid >= 1 && grid <= 8,
       s"tileFingerprint: grid in [1,8], got $grid")
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val keptIdx = inSchema.fields.indices.filterNot(_ == bytesIdx)
-    val outSchema = StructType(keptIdx.map(inSchema.fields) ++ Seq(
+    imageFeatures(df, Seq(
       StructField("tile_fps", ArrayType(LongType, false)),
-      StructField("tiles_ok", BooleanType)))
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        val kept = keptIdx.map(r.get)
-        val out: Seq[Any] =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            val img = if (bytes.isEmpty) null
-              else codec.decode(bytes, r.getString(fmtIdx))
-            if (img == null) Seq(Array.fill(grid * grid)(0L), false)
-            else {
-              val w = img.getWidth; val h = img.getHeight
-              val fps = new Array[Long](grid * grid)
-              var ty = 0
-              while (ty < grid) {
-                val ty0 = ty * h / grid
-                val ty1 = math.max((ty + 1) * h / grid, ty0 + 1)
-                val th = math.min(ty1, h) - ty0
-                var tx = 0
-                while (tx < grid) {
-                  val tx0 = tx * w / grid
-                  val tx1 = math.max((tx + 1) * w / grid, tx0 + 1)
-                  val tw = math.min(tx1, w) - tx0
-                  var fp = 0xcbf29ce484222325L
-                  @inline def mix(b: Int): Unit = {
-                    fp ^= (b & 0xff); fp *= 0x100000001b3L
-                  }
-                  mix(tw); mix(tw >> 8); mix(th); mix(th >> 8)
-                  var y = 0
-                  while (y < th) {
-                    var x = 0
-                    while (x < tw) {
-                      val p = img.getRGB(tx0 + x, ty0 + y)
-                      mix(p >> 16); mix(p >> 8); mix(p)
-                      x += 1
-                    }
-                    y += 1
-                  }
-                  fps(ty * grid + tx) = fp
-                  tx += 1
-                }
-                ty += 1
-              }
-              Seq(fps, true)
+      StructField("tiles_ok", BooleanType)),
+      Seq(Array.fill(grid * grid)(0L), false)) { (_, img) =>
+      Seq(tiles(img.getWidth, img.getHeight, grid).map {
+        case (tx0, ty0, tw, th) =>
+          var fp = 0xcbf29ce484222325L
+          @inline def mix(b: Int): Unit = {
+            fp ^= (b & 0xff); fp *= 0x100000001b3L
+          }
+          mix(tw); mix(tw >> 8); mix(th); mix(th >> 8)
+          var y = 0
+          while (y < th) {
+            var x = 0
+            while (x < tw) {
+              val p = img.getRGB(tx0 + x, ty0 + y)
+              mix(p >> 16); mix(p >> 8); mix(p)
+              x += 1
             }
-          } catch { case _: Exception =>
-            Seq(Array.fill(grid * grid)(0L), false) }
-        Row.fromSeq(kept ++ out)
-      }
+            y += 1
+          }
+          fp
+      }.toArray, true)
     }
   }
 
@@ -600,144 +562,64 @@ object Multimodal {
     * reason image pipelines pair the two hashes.
     * Container-invariant like aHash (a function of the
     * pixel matrix alone — q136 proves it on lossless transcode
-    * twins); same partition discipline (one codec per partition,
-    * pixels die inside it).
+    * twins). Undecodable payloads give (0, false).
     */
-  def differenceHash(df: DataFrame): DataFrame = {
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val keptIdx = inSchema.fields.indices.filterNot(_ == bytesIdx)
-    val outSchema = StructType(keptIdx.map(inSchema.fields) ++ Seq(
+  def differenceHash(df: DataFrame): DataFrame =
+    imageFeatures(df, Seq(
       StructField("dhash", LongType),
-      StructField("dhash_ok", BooleanType)))
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        val kept = keptIdx.map(r.get)
-        val hash: Seq[Any] =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            val img = if (bytes.isEmpty) null
-              else codec.decode(bytes, r.getString(fmtIdx))
-            if (img == null) Seq(0L, false)
-            else {
-              val w = img.getWidth; val h = img.getHeight
-              val cells = new Array[Double](72) // 8 rows x 9 cols
-              var i = 0
-              while (i < 8) {
-                val y0 = i * h / 8
-                val y1 = math.max((i + 1) * h / 8, y0 + 1)
-                var j = 0
-                while (j < 9) {
-                  val x0 = j * w / 9
-                  val x1 = math.max((j + 1) * w / 9, x0 + 1)
-                  var s = 0.0; var n = 0
-                  var y = y0
-                  while (y < math.min(y1, h)) {
-                    var x = x0
-                    while (x < math.min(x1, w)) {
-                      val p = img.getRGB(x, y)
-                      s += 0.299 * ((p >> 16) & 0xff) +
-                        0.587 * ((p >> 8) & 0xff) + 0.114 * (p & 0xff)
-                      n += 1; x += 1
-                    }
-                    y += 1
-                  }
-                  cells(i * 9 + j) = if (n > 0) s / n else 0.0
-                  j += 1
-                }
-                i += 1
-              }
-              var bits = 0L
-              var k = 0
-              while (k < 64) {
-                val i0 = k / 8; val j0 = k % 8
-                if (cells(i0 * 9 + j0) > cells(i0 * 9 + j0 + 1))
-                  bits |= (1L << (63 - k))
-                k += 1
-              }
-              Seq(bits, true)
-            }
-          } catch { case _: Exception => Seq(0L, false) }
-        Row.fromSeq(kept ++ hash)
+      StructField("dhash_ok", BooleanType)), Seq(0L, false)) { (_, img) =>
+      val cells = cellMeans(img, 0, 0, img.getWidth, img.getHeight, 8, 9)
+      var bits = 0L
+      var k = 0
+      while (k < 64) {
+        val i0 = k / 8; val j0 = k % 8
+        if (cells(i0 * 9 + j0) > cells(i0 * 9 + j0 + 1))
+          bits |= (1L << (63 - k))
+        k += 1
       }
+      Seq(bits, true)
     }
-  }
 
   /** Low-information image gate: decode each payload and compute
     * per-image luma statistics — `mean_luma`, population `std_luma` —
     * plus `flat` (std <= `flatStd`: near-constant images — blank
     * thumbnails, tracking pixels, solid placeholders — the classic
     * junk an image-caption curation pass drops) and `luma_ok` (decode
-    * verdict; undecodable/null payloads report `flat = false` — they
-    * are the QUARANTINE gate's business ([[auditPayloads]]), not this
-    * filter's).
-    *
-    * Same discipline as every codec op here: mapPartitions with a
-    * partition-reused [[graft.validate.PixelCheck.Codec]], payload
-    * bytes die inside the partition (dropped from the output schema),
-    * fixed row-major accumulation so the doubles are deterministic.
+    * verdict; undecodable/null payloads report (0, 0, false, false) —
+    * they are the QUARANTINE gate's business ([[auditPayloads]]), not
+    * this filter's). Fixed row-major accumulation, so the doubles are
+    * deterministic.
     */
-  def lumaStats(df: DataFrame, flatStd: Double = 2.0): DataFrame = {
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val keptIdx = inSchema.fields.indices.filterNot(_ == bytesIdx)
-    val outSchema = StructType(keptIdx.map(inSchema.fields) ++ Seq(
+  def lumaStats(df: DataFrame, flatStd: Double = 2.0): DataFrame =
+    imageFeatures(df, Seq(
       StructField("mean_luma", DoubleType),
       StructField("std_luma", DoubleType),
       StructField("flat", BooleanType),
-      StructField("luma_ok", BooleanType)))
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        val kept = keptIdx.map(r.get)
-        val stats: Seq[Any] =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            val img = if (bytes.isEmpty) null
-              else codec.decode(bytes, r.getString(fmtIdx))
-            if (img == null) Seq(0.0, 0.0, false, false)
-            else {
-              val w = img.getWidth; val h = img.getHeight
-              // Welford's online update, fixed row-major order: the
-              // single-pass s2/n - mean^2 form cancels catastrophically
-              // on large images (mean^2 ~1.6e4 vs variance ~4 at the
-              // flat threshold) and can flip the flat verdict; Welford
-              // is the same O(wh) cost and numerically stable
-              var n = 0L; var mean = 0.0; var m2 = 0.0
-              var y = 0
-              while (y < h) {
-                var x = 0
-                while (x < w) {
-                  val p = img.getRGB(x, y)
-                  val l = 0.299 * ((p >> 16) & 0xff) +
-                    0.587 * ((p >> 8) & 0xff) + 0.114 * (p & 0xff)
-                  n += 1
-                  val d = l - mean
-                  mean += d / n
-                  m2 += d * (l - mean)
-                  x += 1
-                }
-                y += 1
-              }
-              val std = if (n > 0) math.sqrt(math.max(m2 / n, 0.0)) else 0.0
-              Seq(mean, std, std <= flatStd, true)
-            }
-          } catch { case _: Exception => Seq(0.0, 0.0, false, false) }
-        Row.fromSeq(kept ++ stats)
+      StructField("luma_ok", BooleanType)),
+      Seq(0.0, 0.0, false, false)) { (_, img) =>
+      val w = img.getWidth; val h = img.getHeight
+      // Welford's online update, fixed row-major order: the
+      // single-pass s2/n - mean^2 form cancels catastrophically
+      // on large images (mean^2 ~1.6e4 vs variance ~4 at the
+      // flat threshold) and can flip the flat verdict; Welford
+      // is the same O(wh) cost and numerically stable
+      var n = 0L; var mean = 0.0; var m2 = 0.0
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          val l = luma(img.getRGB(x, y))
+          n += 1
+          val d = l - mean
+          mean += d / n
+          m2 += d * (l - mean)
+          x += 1
+        }
+        y += 1
       }
+      val std = if (n > 0) math.sqrt(math.max(m2 / n, 0.0)) else 0.0
+      Seq(mean, std, std <= flatStd, true)
     }
-  }
 
   /** Per-image EXACT per-channel pixel statistics: pixel count plus
     * integer sums and sums-of-squares of the R/G/B channels (sRGB
@@ -749,16 +631,10 @@ object Multimodal {
     * lets a lossless transcode twin certify bit-equality through the
     * driver gate (q187) and lets the corpus aggregate distribute as
     * a plain map-side-combined SUM. Undecodable/null payloads report
-    * zeros with `channels_ok = false`. Same partition discipline as
-    * every codec op here: reused codec, bytes dropped from the
-    * output schema, fixed row-major scan.
+    * zeros with `channels_ok = false`.
     */
-  def channelStats(df: DataFrame): DataFrame = {
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val keptIdx = inSchema.fields.indices.filterNot(_ == bytesIdx)
-    val outSchema = StructType(keptIdx.map(inSchema.fields) ++ Seq(
+  def channelStats(df: DataFrame): DataFrame =
+    imageFeatures(df, Seq(
       StructField("n_px", LongType),
       StructField("r_sum", LongType),
       StructField("g_sum", LongType),
@@ -766,50 +642,29 @@ object Multimodal {
       StructField("r_sq", LongType),
       StructField("g_sq", LongType),
       StructField("b_sq", LongType),
-      StructField("channels_ok", BooleanType)))
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        val kept = keptIdx.map(r.get)
-        val stats: Seq[Any] =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            val img = if (bytes.isEmpty) null
-              else codec.decode(bytes, r.getString(fmtIdx))
-            if (img == null) Seq(0L, 0L, 0L, 0L, 0L, 0L, 0L, false)
-            else {
-              val w = img.getWidth; val h = img.getHeight
-              var n = 0L
-              var rs = 0L; var gs = 0L; var bs = 0L
-              var rq = 0L; var gq = 0L; var bq = 0L
-              var y = 0
-              while (y < h) {
-                var x = 0
-                while (x < w) {
-                  val p = img.getRGB(x, y)
-                  val rv = (p >> 16) & 0xff
-                  val gv = (p >> 8) & 0xff
-                  val bv = p & 0xff
-                  rs += rv; gs += gv; bs += bv
-                  rq += rv.toLong * rv; gq += gv.toLong * gv
-                  bq += bv.toLong * bv
-                  n += 1; x += 1
-                }
-                y += 1
-              }
-              Seq(n, rs, gs, bs, rq, gq, bq, true)
-            }
-          } catch {
-            case _: Exception => Seq(0L, 0L, 0L, 0L, 0L, 0L, 0L, false)
-          }
-        Row.fromSeq(kept ++ stats)
+      StructField("channels_ok", BooleanType)),
+      Seq(0L, 0L, 0L, 0L, 0L, 0L, 0L, false)) { (_, img) =>
+      val w = img.getWidth; val h = img.getHeight
+      var n = 0L
+      var rs = 0L; var gs = 0L; var bs = 0L
+      var rq = 0L; var gq = 0L; var bq = 0L
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          val p = img.getRGB(x, y)
+          val rv = (p >> 16) & 0xff
+          val gv = (p >> 8) & 0xff
+          val bv = p & 0xff
+          rs += rv; gs += gv; bs += bv
+          rq += rv.toLong * rv; gq += gv.toLong * gv
+          bq += bv.toLong * bv
+          n += 1; x += 1
+        }
+        y += 1
       }
+      Seq(n, rs, gs, bs, rq, gq, bq, true)
     }
-  }
 
   /** Corpus-level channel normalization constants (the dataset
     * mean/std per channel a vision training pipeline bakes into its
@@ -923,47 +778,17 @@ object Multimodal {
     * (png = lossless: the decoded pixel matrix is preserved exactly,
     * so pixel-derived features — [[averageHash]], PSNR audits — are
     * invariant under the container change; jpeg = lossy re-encode).
-    * Undecodable payloads pass through UNCHANGED with `fmt` intact —
-    * quarantine first ([[auditPayloads]]) if that matters. Same
-    * partition discipline as every codec op here.
+    * Undecodable payloads pass through UNCHANGED with `fmt` intact;
+    * `w`/`h` are not touched.
     */
   def transcode(df: DataFrame, targetFmt: String): DataFrame = {
     require(Seq("png", "jpeg").contains(targetFmt),
       s"unsupported target format $targetFmt")
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    implicit val enc = org.apache.spark.sql.Encoders.row(inSchema)
-    df.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        val out =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            val img = if (bytes.isEmpty) null
-              else codec.decode(bytes, r.getString(fmtIdx))
-            if (img == null) None
-            else Some((codec.encode(img, targetFmt), targetFmt))
-          } catch { case _: Exception => None }
-        out match {
-          case None => r
-          case Some((bytes, fmt)) =>
-            Row.fromSeq(r.toSeq.zipWithIndex.map {
-              case (_, `bytesIdx`) => bytes
-              case (_, `fmtIdx`) => fmt
-              case (v, _) => v
-            })
-        }
-      }
-    }
+    rewrite(df, targetFmt, setDims = false)(_ => img => img)
   }
 
   /** Per-payload resize result: target dims, mean + checksum of the
-    * resized gray plane. Like [[ImageFeatures]], only scalars leave
-    * the partition — the resized pixel buffer dies inside it.
+    * resized gray plane.
     */
   case class ResizeFeatures(w: Int, h: Int, mean: Double,
       checksum: Long, ok: Boolean)
@@ -993,9 +818,7 @@ object Multimodal {
               val sy = y * h / targetH
               var x = 0
               while (x < targetW) {
-                val p = img.getRGB(x * w / targetW, sy)
-                sum += math.round(0.299 * ((p >> 16) & 0xff) +
-                  0.587 * ((p >> 8) & 0xff) + 0.114 * (p & 0xff))
+                sum += math.round(luma(img.getRGB(x * w / targetW, sy)))
                 x += 1
               }
               y += 1
@@ -1038,44 +861,27 @@ object Multimodal {
     }
   }
 
-  /** Attach resize features (same mapPartitions batch shape as
-    * [[withDecodeFeatures]]; payload does not pass through).
+  /** Attach resize features (the [[withDecodeFeatures]] shape: every
+    * non-payload column + five resize columns). The pluggable
+    * `resizer` gets each payload (null as empty) and reports its own
+    * failure row; a resizer exception gives (0, 0, NaN, 0, false).
     */
   def withResizeFeatures(df: DataFrame, resizer: Resizer,
       targetW: Int, targetH: Int): DataFrame = {
     require(targetW > 0 && targetH > 0,
       s"target dims must be positive, got ${targetW}x$targetH")
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val keptIdx = inSchema.fields.indices.filterNot(_ == bytesIdx)
-    val outSchema = StructType(keptIdx.map(inSchema.fields) ++ Seq(
+    val wIdx = df.schema.fieldIndex("w")
+    val hIdx = df.schema.fieldIndex("h")
+    features(df, Seq(
       StructField("resized_w", IntegerType),
       StructField("resized_h", IntegerType),
       StructField("resized_mean", DoubleType),
       StructField("resized_checksum", LongType),
-      StructField("resize_ok", BooleanType)))
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val wIdx = inSchema.fieldIndex("w")
-    val hIdx = inSchema.fieldIndex("h")
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      it.map { r =>
-        // per-row quarantine, same doctrine as withDecodeFeatures: a
-        // resizer exception must flag the row, not kill the job
-        val f =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            resizer.resize(bytes,
-              r.getString(fmtIdx), r.getInt(wIdx), r.getInt(hIdx),
-              targetW, targetH)
-          } catch {
-            case _: Exception =>
-              ResizeFeatures(0, 0, Double.NaN, 0L, ok = false)
-          }
-        Row.fromSeq(keptIdx.map(r.get) ++
-          Seq(f.w, f.h, f.mean, f.checksum, f.ok))
-      }
+      StructField("resize_ok", BooleanType)),
+      Seq(0, 0, Double.NaN, 0L, false)) { (r, px, bytesIdx, fmtIdx) =>
+      val f = resizer.resize(px.bytes(r, bytesIdx), r.getString(fmtIdx),
+        r.getInt(wIdx), r.getInt(hIdx), targetW, targetH)
+      Seq(f.w, f.h, f.mean, f.checksum, f.ok)
     }
   }
 
@@ -1352,6 +1158,28 @@ object Multimodal {
       blockSize)
   }
 
+  /** NN-sample `img` onto a `tw x th` grid with the SAME integer
+    * source rule as [[ImageIoResizer]] (`src = x * w div tw`), so a
+    * normalized compare of an NN-upscaled twin against its original
+    * recovers the original exactly.
+    */
+  private def nnSample(img: BufferedImage, tw: Int, th: Int)
+      : BufferedImage = {
+    val out = new BufferedImage(tw, th, BufferedImage.TYPE_INT_RGB)
+    val (w, h) = (img.getWidth, img.getHeight)
+    var y = 0
+    while (y < th) {
+      val sy = y * h / th
+      var x = 0
+      while (x < tw) {
+        out.setRGB(x, y, img.getRGB(x * w / tw, sy))
+        x += 1
+      }
+      y += 1
+    }
+    out
+  }
+
   /** Candidate-pair PSNR verify — the graded SECOND stage of image
     * dedup. Stage 1 ([[phashNearDups]] / [[graft.multimodal.PhashIndex]])
     * proposes candidate pairs from the 64-bit hash column alone; this
@@ -1366,9 +1194,8 @@ object Multimodal {
     * so payloads move only for the candidate ids — the distinct id set
     * is broadcast into the corpus scan (a corpus-side filter, NO
     * corpus shuffle), and only the surviving payloads shuffle, once
-    * per pair side. Decode happens in one mapPartitions with a
-    * partition-reused codec; pixel buffers die inside the partition
-    * and 5 scalars per pair leave.
+    * per pair side. Each side decodes through the pixel ops' shared
+    * payload access; 5 scalars per pair leave the partition.
     *
     * Verdicts per pair (decode failures audit false, never throw):
     *   - decode_ok   — both payloads decoded
@@ -1386,29 +1213,6 @@ object Multimodal {
     * +Infinity against its original while `dims_match` stays false —
     * the verify stage for [[resizeEncode]]-materialized ladders.
     */
-  /** NN-sample `img` onto a `tw x th` grid with the SAME integer
-    * source rule as [[ImageIoResizer]] (`src = x * w div tw`), so a
-    * normalized compare of an NN-upscaled twin against its original
-    * recovers the original exactly.
-    */
-  private def nnSample(img: java.awt.image.BufferedImage, tw: Int,
-      th: Int): java.awt.image.BufferedImage = {
-    val out = new java.awt.image.BufferedImage(tw, th,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val (w, h) = (img.getWidth, img.getHeight)
-    var y = 0
-    while (y < th) {
-      val sy = y * h / th
-      var x = 0
-      while (x < tw) {
-        out.setRGB(x, y, img.getRGB(x * w / tw, sy))
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
-
   def pairPsnrVerify(imgs: DataFrame, idCol: String, pairs: DataFrame,
       aCol: String = "id_a", bCol: String = "id_b",
       minPsnrDb: Double = 40.0, normalizeDims: Boolean = false): DataFrame = {
@@ -1434,58 +1238,43 @@ object Multimodal {
         col("__fmt").as("__fmt_b")), col(bCol) === col("__pid"), "left")
       .drop("__pid")
     val inSchema = joined.schema
-    val keptIdx = pairs.columns.map(inSchema.fieldIndex)
     val baIdx = inSchema.fieldIndex("__bytes_a")
     val faIdx = inSchema.fieldIndex("__fmt_a")
     val bbIdx = inSchema.fieldIndex("__bytes_b")
     val fbIdx = inSchema.fieldIndex("__fmt_b")
-    val outSchema = StructType(
-      keptIdx.map(inSchema.fields).toIndexedSeq ++ Seq(
-        StructField("decode_ok", BooleanType),
-        StructField("dims_match", BooleanType),
-        StructField("psnr_db", DoubleType),
-        StructField("exact", BooleanType),
-        StructField("is_dup", BooleanType)))
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    joined.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      def dec(r: Row, bi: Int, fi: Int): java.awt.image.BufferedImage =
-        try {
-          val bytes = Option(r.getAs[Array[Byte]](bi))
-            .getOrElse(Array.emptyByteArray)
-          if (bytes.isEmpty) null else codec.decode(bytes, r.getString(fi))
-        } catch { case _: Exception => null }
-      it.map { r =>
-        val kept = keptIdx.map(r.get).toIndexedSeq
-        val ia = dec(r, baIdx, faIdx)
-        val ib = dec(r, bbIdx, fbIdx)
-        val verdict: Seq[Any] =
-          if (ia == null || ib == null)
-            Seq(false, false, null, false, false)
+    Kernel.append(joined, pairs.columns.toSeq.map(inSchema.fieldIndex), Seq(
+      StructField("decode_ok", BooleanType),
+      StructField("dims_match", BooleanType),
+      StructField("psnr_db", DoubleType),
+      StructField("exact", BooleanType),
+      StructField("is_dup", BooleanType))) { () =>
+      val px = new Payloads
+      r => {
+        val ia = px.image(r, baIdx, faIdx)
+        val ib = px.image(r, bbIdx, fbIdx)
+        if (ia == null || ib == null)
+          Seq(false, false, null, false, false)
+        else {
+          val dimsMatch = ia.getWidth == ib.getWidth &&
+            ia.getHeight == ib.getHeight
+          if (!dimsMatch && !normalizeDims)
+            Seq(true, false, null, false, false)
           else {
-            val dimsMatch = ia.getWidth == ib.getWidth &&
-              ia.getHeight == ib.getHeight
-            if (!dimsMatch && !normalizeDims)
-              Seq(true, false, null, false, false)
-            else {
-              // normalized compare: NN-sample both onto the smaller
-              // common grid (an NN-downsample of an NN-upsample is
-              // the identity, so scale-differing true dups score
-              // +Infinity); dims_match stays honest
-              val (pa, pb) =
-                if (dimsMatch) (ia, ib)
-                else {
-                  val tw = math.min(ia.getWidth, ib.getWidth)
-                  val th = math.min(ia.getHeight, ib.getHeight)
-                  (nnSample(ia, tw, th), nnSample(ib, tw, th))
-                }
-              val p = PixelCheck.psnr(pa, pb)
-              Seq(true, dimsMatch, p, p.isPosInfinity, p >= minPsnrDb)
-            }
+            // normalized compare: NN-sample both onto the smaller
+            // common grid (an NN-downsample of an NN-upsample is
+            // the identity, so scale-differing true dups score
+            // +Infinity); dims_match stays honest
+            val (pa, pb) =
+              if (dimsMatch) (ia, ib)
+              else {
+                val tw = math.min(ia.getWidth, ib.getWidth)
+                val th = math.min(ia.getHeight, ib.getHeight)
+                (nnSample(ia, tw, th), nnSample(ib, tw, th))
+              }
+            val p = PixelCheck.psnr(pa, pb)
+            Seq(true, dimsMatch, p, p.isPosInfinity, p >= minPsnrDb)
           }
-        Row.fromSeq(kept ++ verdict)
+        }
       }
     }
   }
@@ -1501,52 +1290,20 @@ object Multimodal {
     * `normalizeDims` certifies a materialized ladder against its
     * originals (+Infinity for every true pair).
     *
-    * Undecodable payloads pass through UNCHANGED (quarantine first
-    * via [[auditPayloads]]); null/absurd targets are rejected up
-    * front. Same partition discipline as every codec op: one codec
-    * per partition, pixel buffers die inside it.
+    * Undecodable payloads pass through UNCHANGED; null/absurd targets
+    * are rejected up front.
     */
   def resizeEncode(df: DataFrame, twCol: String, thCol: String,
       maxDim: Int = 16384): DataFrame = {
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val wIdx = inSchema.fieldIndex("w")
-    val hIdx = inSchema.fieldIndex("h")
-    val twIdx = inSchema.fieldIndex(twCol)
-    val thIdx = inSchema.fieldIndex(thCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(inSchema)
-    df.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        require(!r.isNullAt(twIdx) && !r.isNullAt(thIdx),
-          s"resizeEncode: null target dims in ($twCol, $thCol)")
-        val tw = r.getInt(twIdx); val th = r.getInt(thIdx)
-        require(tw > 0 && th > 0 && tw <= maxDim && th <= maxDim,
-          s"resizeEncode: bad target ${tw}x$th (maxDim $maxDim)")
-        val out =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            val img = if (bytes.isEmpty) null
-              else codec.decode(bytes, r.getString(fmtIdx))
-            if (img == null) None
-            else Some(codec.encode(nnSample(img, tw, th), "png"))
-          } catch { case _: Exception => None }
-        out match {
-          case None => r
-          case Some(newBytes) =>
-            Row.fromSeq(r.toSeq.zipWithIndex.map {
-              case (_, `bytesIdx`) => newBytes
-              case (_, `fmtIdx`) => "png"
-              case (_, `wIdx`) => tw
-              case (_, `hIdx`) => th
-              case (v, _) => v
-            })
-        }
-      }
+    val twIdx = df.schema.fieldIndex(twCol)
+    val thIdx = df.schema.fieldIndex(thCol)
+    rewrite(df, "png", setDims = true) { r =>
+      require(!r.isNullAt(twIdx) && !r.isNullAt(thIdx),
+        s"resizeEncode: null target dims in ($twCol, $thCol)")
+      val tw = r.getInt(twIdx); val th = r.getInt(thIdx)
+      require(tw > 0 && th > 0 && tw <= maxDim && th <= maxDim,
+        s"resizeEncode: bad target ${tw}x$th (maxDim $maxDim)")
+      img => nnSample(img, tw, th)
     }
   }
 
@@ -1618,9 +1375,7 @@ object Multimodal {
     * [[augmentPlan]]'s quarantine rows compose), an undecodable
     * payload, or a window that falls outside the DECODED bounds
     * (declared-dims drift is a row you quarantine via
-    * [[auditPayloads]], never a job you kill). Same partition
-    * discipline as [[resizeEncode]]: one codec per partition, pixel
-    * buffers die inside it, nothing shuffles.
+    * [[auditPayloads]]). Nothing shuffles.
     */
   def cropEncode(df: DataFrame, xCol: String, yCol: String,
       cwCol: String, chCol: String): DataFrame =
@@ -1637,9 +1392,7 @@ object Multimodal {
     *
     * Pass-through (row unchanged) quarantines: a null plan field, an
     * undecodable payload, a window outside the DECODED bounds, or a
-    * jitter level with no entry in `jitterDeltas` — per-row
-    * discipline, never a dead job. One codec per partition; pixel
-    * buffers die inside it; nothing shuffles.
+    * jitter level with no entry in `jitterDeltas`. Nothing shuffles.
     */
   def augmentEncode(df: DataFrame, xCol: String, yCol: String,
       cwCol: String, chCol: String, flipCol: Option[String] = None,
@@ -1649,81 +1402,52 @@ object Multimodal {
       "augmentEncode: jitterCol and jitterDeltas come together " +
         "(a level column needs its delta table and vice versa)")
     val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val wIdx = inSchema.fieldIndex("w")
-    val hIdx = inSchema.fieldIndex("h")
     val planIdx = Seq(xCol, yCol, cwCol, chCol)
       .map(inSchema.fieldIndex)
     val flipIdx = flipCol.map(inSchema.fieldIndex)
     val jitterIdx = jitterCol.map(inSchema.fieldIndex)
-    implicit val enc = org.apache.spark.sql.Encoders.row(inSchema)
-    df.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        val nullPlan = planIdx.exists(r.isNullAt) ||
-          flipIdx.exists(r.isNullAt) || jitterIdx.exists(r.isNullAt)
-        val out =
-          if (nullPlan) None
-          else {
-            val Seq(cx, cy, cw, ch) = planIdx.map(r.getInt)
-            val flip = flipIdx.exists(r.getBoolean)
-            val delta = jitterIdx match {
-              case None => Some(0)
-              case Some(ji) =>
-                val lvl = r.getInt(ji)
-                if (lvl >= 0 && lvl < jitterDeltas.length)
-                  Some(jitterDeltas(lvl))
-                else None // level outside the table: quarantine row
-            }
-            try {
-              val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-                .getOrElse(Array.emptyByteArray)
-              val img = if (bytes.isEmpty) null
-                else codec.decode(bytes, r.getString(fmtIdx))
-              if (img == null || delta.isEmpty ||
-                  cx < 0 || cy < 0 || cw < 1 || ch < 1 ||
-                  cx + cw > img.getWidth || cy + ch > img.getHeight)
-                None
-              else {
-                val d = delta.get
-                val crop = new java.awt.image.BufferedImage(cw, ch,
-                  java.awt.image.BufferedImage.TYPE_INT_RGB)
-                var y = 0
-                while (y < ch) {
-                  var x = 0
-                  while (x < cw) {
-                    val sx = if (flip) cx + (cw - 1 - x) else cx + x
-                    val p = img.getRGB(sx, cy + y)
-                    val q = if (d == 0) p & 0xffffff else {
-                      def ch8(v: Int) =
-                        math.min(255, math.max(0, v + d))
-                      (ch8((p >> 16) & 0xff) << 16) |
-                        (ch8((p >> 8) & 0xff) << 8) | ch8(p & 0xff)
-                    }
-                    crop.setRGB(x, y, q)
-                    x += 1
-                  }
-                  y += 1
-                }
-                Some(codec.encode(crop, "png"))
-              }
-            } catch { case _: Exception => None }
-          }
-        out match {
-          case None => r
-          case Some(newBytes) =>
-            val cw = r.getInt(planIdx(2)); val ch = r.getInt(planIdx(3))
-            Row.fromSeq(r.toSeq.zipWithIndex.map {
-              case (_, `bytesIdx`) => newBytes
-              case (_, `fmtIdx`) => "png"
-              case (_, `wIdx`) => cw
-              case (_, `hIdx`) => ch
-              case (v, _) => v
-            })
+    rewrite(df, "png", setDims = true) { r =>
+      val nullPlan = planIdx.exists(r.isNullAt) ||
+        flipIdx.exists(r.isNullAt) || jitterIdx.exists(r.isNullAt)
+      // a level outside the delta table quarantines the row
+      val delta =
+        if (nullPlan) None
+        else jitterIdx match {
+          case None => Some(0)
+          case Some(ji) =>
+            val lvl = r.getInt(ji)
+            if (lvl >= 0 && lvl < jitterDeltas.length)
+              Some(jitterDeltas(lvl))
+            else None
         }
+      if (delta.isEmpty) null
+      else {
+        val Seq(cx, cy, cw, ch) = planIdx.map(r.getInt)
+        val flip = flipIdx.exists(r.getBoolean)
+        val d = delta.get
+        img =>
+          if (cx < 0 || cy < 0 || cw < 1 || ch < 1 ||
+              cx + cw > img.getWidth || cy + ch > img.getHeight) null
+          else {
+            val crop = new BufferedImage(cw, ch, BufferedImage.TYPE_INT_RGB)
+            var y = 0
+            while (y < ch) {
+              var x = 0
+              while (x < cw) {
+                val sx = if (flip) cx + (cw - 1 - x) else cx + x
+                val p = img.getRGB(sx, cy + y)
+                val q = if (d == 0) p & 0xffffff else {
+                  def ch8(v: Int) = math.min(255, math.max(0, v + d))
+                  (ch8((p >> 16) & 0xff) << 16) |
+                    (ch8((p >> 8) & 0xff) << 8) | ch8(p & 0xff)
+                }
+                crop.setRGB(x, y, q)
+                x += 1
+              }
+              y += 1
+            }
+            crop
+          }
       }
     }
   }
@@ -1741,76 +1465,44 @@ object Multimodal {
     * round-trip certificate with no reference decoder in the loop.
     *
     * Pass-through quarantines (row unchanged): null plan fields,
-    * undecodable payload, rotation outside the table — per-row
-    * discipline, never a dead job. One codec per partition; pixel
-    * buffers die inside it; nothing shuffles.
+    * undecodable payload, rotation outside the table. Nothing
+    * shuffles.
     */
   def orientEncode(df: DataFrame, flipCol: String, rotCol: String)
       : DataFrame = {
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val wIdx = inSchema.fieldIndex("w")
-    val hIdx = inSchema.fieldIndex("h")
-    val flipIdx = inSchema.fieldIndex(flipCol)
-    val rotIdx = inSchema.fieldIndex(rotCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(inSchema)
-    df.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        val out =
-          if (r.isNullAt(flipIdx) || r.isNullAt(rotIdx)) None
-          else {
-            val flip = r.getBoolean(flipIdx)
-            val rot = r.getInt(rotIdx)
-            try {
-              val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-                .getOrElse(Array.emptyByteArray)
-              val img = if (bytes.isEmpty) null
-                else codec.decode(bytes, r.getString(fmtIdx))
-              if (img == null || !Set(0, 90, 180, 270).contains(rot))
-                None
-              else {
-                val sw = img.getWidth; val sh = img.getHeight
-                val (ow, oh) =
-                  if (rot == 90 || rot == 270) (sh, sw) else (sw, sh)
-                val dst = new java.awt.image.BufferedImage(ow, oh,
-                  java.awt.image.BufferedImage.TYPE_INT_RGB)
-                var y = 0
-                while (y < oh) {
-                  var x = 0
-                  while (x < ow) {
-                    // invert the CW rotation: which FLIPPED-image
-                    // pixel lands at display (x, y)?
-                    val (fx, fy) = rot match {
-                      case 0 => (x, y)
-                      case 90 => (y, sh - 1 - x)
-                      case 180 => (sw - 1 - x, sh - 1 - y)
-                      case _ => (sw - 1 - y, x) // 270
-                    }
-                    // flip-H ran FIRST on the stored pixels
-                    val sx = if (flip) sw - 1 - fx else fx
-                    dst.setRGB(x, y, img.getRGB(sx, fy) & 0xffffff)
-                    x += 1
-                  }
-                  y += 1
-                }
-                Some((codec.encode(dst, "png"), ow, oh))
+    val flipIdx = df.schema.fieldIndex(flipCol)
+    val rotIdx = df.schema.fieldIndex(rotCol)
+    rewrite(df, "png", setDims = true) { r =>
+      if (r.isNullAt(flipIdx) || r.isNullAt(rotIdx)) null
+      else {
+        val flip = r.getBoolean(flipIdx)
+        val rot = r.getInt(rotIdx)
+        if (!Set(0, 90, 180, 270).contains(rot)) null
+        else img => {
+          val sw = img.getWidth; val sh = img.getHeight
+          val (ow, oh) =
+            if (rot == 90 || rot == 270) (sh, sw) else (sw, sh)
+          val dst = new BufferedImage(ow, oh, BufferedImage.TYPE_INT_RGB)
+          var y = 0
+          while (y < oh) {
+            var x = 0
+            while (x < ow) {
+              // invert the CW rotation: which FLIPPED-image
+              // pixel lands at display (x, y)?
+              val (fx, fy) = rot match {
+                case 0 => (x, y)
+                case 90 => (y, sh - 1 - x)
+                case 180 => (sw - 1 - x, sh - 1 - y)
+                case _ => (sw - 1 - y, x) // 270
               }
-            } catch { case _: Exception => None }
+              // flip-H ran FIRST on the stored pixels
+              val sx = if (flip) sw - 1 - fx else fx
+              dst.setRGB(x, y, img.getRGB(sx, fy) & 0xffffff)
+              x += 1
+            }
+            y += 1
           }
-        out match {
-          case None => r
-          case Some((newBytes, ow, oh)) =>
-            Row.fromSeq(r.toSeq.zipWithIndex.map {
-              case (_, `bytesIdx`) => newBytes
-              case (_, `fmtIdx`) => "png"
-              case (_, `wIdx`) => ow
-              case (_, `hIdx`) => oh
-              case (v, _) => v
-            })
+          dst
         }
       }
     }

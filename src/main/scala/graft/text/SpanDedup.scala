@@ -1,10 +1,12 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Kernel
 import graft.dedup.Dedup
 
 /** Exact substring (duplicated n-gram span) deduplication, the
@@ -39,10 +41,8 @@ import graft.dedup.Dedup
   *     Without the persist, exchange reuse would still share the
   *     shuffle WRITE, but the window sort + per-window md5 would run
   *     once per consumer. The cache registers with the session's
-  *     CacheManager and stays until `spark.catalog.clearCache()` (the
-  *     same contract as [[graft.Flagship.features]]'s fit-input
-  *     cache) — a production job drops it after materializing its
-  *     output;
+  *     CacheManager and stays until `spark.catalog.clearCache()` — a
+  *     production job drops it after materializing its output;
   *   - the duplicate-gram table is a map-side-combined count over
   *     int64 gram hashes (never gram text) with an early
   *     `count >= minCount` filter — its exchange carries
@@ -79,55 +79,41 @@ object SpanDedup {
   private[graft] def gramRows(df: DataFrame, idCol: String,
       textCol: String, n: Int): DataFrame = {
     require(n >= 2, s"span dedup needs n >= 2, got $n")
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
     val in = Dedup.spreadForKernel(
-      df.select(col(idCol), col(textCol).cast("string")))
-    val idf = in.schema.head
+      df.select(col(idCol).as("doc_id"), col(textCol).cast("string")))
     // ONE row per document carrying the primitive gram-hash array;
     // the codegen'd posexplode below expands it to (pos, hash) rows —
     // emitting gram ROWS straight from the kernel paid a per-row
     // encoder round trip that showed up at the 10x scale (sf1 span
     // kernel), while a long[] encodes as one primitive-array copy
-    val schema = StructType(Seq(
-      StructField("doc_id", idf.dataType, idf.nullable),
+    Kernel.append(in, Seq(0), Seq(
       StructField("__gs", ArrayType(LongType, containsNull = false),
-        nullable = false)))
-    in.mapPartitions { it =>
+        nullable = false))) { () =>
       val md = java.security.MessageDigest.getInstance("MD5")
-      it.flatMap { r =>
+      val sb = new java.lang.StringBuilder
+      r => {
         val text = if (r.isNullAt(1)) null else r.getString(1)
-        if (text == null) Iterator.empty
+        val toks = if (text == null) null else text.split(" ", -1)
+        if (toks == null || toks.length < n) null
         else {
-          val toks = text.split(" ", -1)
-          if (toks.length < n) Iterator.empty
-          else {
-            val gs = new Array[Long](toks.length - n + 1)
-            val sb = new java.lang.StringBuilder
-            var p = 0
-            while (p < gs.length) {
-              sb.setLength(0)
-              var j = 0
-              while (j < n) {
-                if (j > 0) sb.append(' ')
-                sb.append(toks(p + j)); j += 1
-              }
-              md.reset()
-              val d = md.digest(sb.toString
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              // first 15 hex digits = first 7 bytes + the high nibble
-              // of the 8th — exactly conv(substring(hex, 1, 15), 16, 10)
-              var v = 0L
-              var b = 0
-              while (b < 7) { v = (v << 8) | (d(b) & 0xffL); b += 1 }
-              gs(p) = (v << 4) | ((d(7) & 0xffL) >>> 4)
-              p += 1
-            }
-            Iterator.single(Row(r.get(0), gs.toSeq))
+          val gs = new Array[Long](toks.length - n + 1)
+          var p = 0
+          while (p < gs.length) {
+            md.reset()
+            val d = md.digest(Dedup.gram(toks, p, n, sb)
+              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+            // first 15 hex digits = first 7 bytes + the high nibble
+            // of the 8th — exactly conv(substring(hex, 1, 15), 16, 10)
+            var v = 0L
+            var b = 0
+            while (b < 7) { v = (v << 8) | (d(b) & 0xffL); b += 1 }
+            gs(p) = (v << 4) | ((d(7) & 0xffL) >>> 4)
+            p += 1
           }
+          Seq(gs)
         }
       }
-    }(Encoders.row(schema))
+    }
       .select(col("doc_id"),
         posexplode(col("__gs")).as(Seq("__pos", "__g")))
   }
@@ -235,8 +221,6 @@ object SpanDedup {
     */
   def removeDuplicatedSpans(df: DataFrame, idCol: String,
       textCol: String, n: Int, minCount: Long = 2L): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
     val grams = gramRows(df, idCol, textCol, n)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // round 6: the reassembly no longer explodes the corpus into
@@ -266,44 +250,39 @@ object SpanDedup {
         col(textCol).cast("string").as("__text"))
       .join(starts, col("doc_id") === col("__kd"), "left")
       .select(col("doc_id"), col("__text"), col("__starts"))
-    val idf = joined.schema.head
-    val schema = StructType(Seq(
-      StructField("doc_id", idf.dataType, idf.nullable),
+    Kernel.append(joined, Seq(0), Seq(
       StructField("n_tokens_removed", LongType, nullable = true),
-      StructField("clean_text", StringType, nullable = false)))
-    joined.mapPartitions { it =>
-      it.map { r =>
-        val text = if (r.isNullAt(1)) null else r.getString(1)
-        if (text == null) Row(r.get(0), 0L, "")
-        else {
-          val toks = text.split(" ", -1)
-          if (r.isNullAt(2)) {
-            // no duplicated window in this doc: all tokens survive
-            Row(r.get(0), 0L, String.join(" ", toks: _*))
-          } else {
-            val st = r.getSeq[Int](2)
-            val sb = new java.lang.StringBuilder
-            var idx = 0
-            var coverEnd = -1L
-            var kept = 0
-            var p = 0
-            while (p < toks.length) {
-              while (idx < st.length && st(idx) <= p) {
-                val e = st(idx).toLong + (n - 1)
-                if (e > coverEnd) coverEnd = e
-                idx += 1
-              }
-              if (p > coverEnd) {
-                if (kept > 0) sb.append(' ')
-                sb.append(toks(p))
-                kept += 1
-              }
-              p += 1
+      StructField("clean_text", StringType, nullable = false))) { () => r =>
+      val text = if (r.isNullAt(1)) null else r.getString(1)
+      if (text == null) Seq(0L, "")
+      else {
+        val toks = text.split(" ", -1)
+        if (r.isNullAt(2)) {
+          // no duplicated window in this doc: all tokens survive
+          Seq(0L, String.join(" ", toks: _*))
+        } else {
+          val st = r.getSeq[Int](2)
+          val sb = new java.lang.StringBuilder
+          var idx = 0
+          var coverEnd = -1L
+          var kept = 0
+          var p = 0
+          while (p < toks.length) {
+            while (idx < st.length && st(idx) <= p) {
+              val e = st(idx).toLong + (n - 1)
+              if (e > coverEnd) coverEnd = e
+              idx += 1
             }
-            Row(r.get(0), (toks.length - kept).toLong, sb.toString)
+            if (p > coverEnd) {
+              if (kept > 0) sb.append(' ')
+              sb.append(toks(p))
+              kept += 1
+            }
+            p += 1
           }
+          Seq((toks.length - kept).toLong, sb.toString)
         }
       }
-    }(Encoders.row(schema))
+    }
   }
 }

@@ -98,7 +98,6 @@ object TextOps {
     * duplicating it below pushed filters.
     */
   def withTextSignals(df: DataFrame, textCol: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types._
     val sigFields = Seq(
       StructField("__ts_ws_tokens", IntegerType, nullable = true),
@@ -110,83 +109,79 @@ object TextOps {
       StructField("__ts_stopword_ratio", DoubleType, nullable = true),
       StructField("__ts_mean_token_len", DoubleType, nullable = true),
       StructField("__ts_quality", DoubleType, nullable = true))
-    val schema = StructType(df.schema.fields ++ sigFields)
     val ti = df.schema.fieldIndex(textCol)
     val stopSets: Array[Set[String]] =
       Langs.map(l => Stopwords(l).toSet).toArray
     val langsArr: Array[String] = Langs.toArray
     val nullSig: Seq[Any] =
       Seq(null, null, "unknown", null, null, null, null, null, null)
-    df.mapPartitions { it =>
-      it.map { r =>
+    graft.core.Kernel.append(df, df.schema.fields.indices, sigFields) {
+      () => r =>
         val text = if (r.isNullAt(ti)) null else r.getString(ti)
-        val sig: Seq[Any] =
-          if (text == null) nullSig
-          else {
-            val toks = text.split(" ", -1)
-            val counts = new Array[Int](langsArr.length)
-            var i = 0
-            while (i < toks.length) {
-              val t = toks(i)
-              var l = 0
-              while (l < langsArr.length) {
-                if (stopSets(l).contains(t)) counts(l) += 1
-                l += 1
-              }
-              i += 1
-            }
-            var maxC = 0
-            var stops = 0L
+        if (text == null) nullSig
+        else {
+          val toks = text.split(" ", -1)
+          val counts = new Array[Int](langsArr.length)
+          var i = 0
+          while (i < toks.length) {
+            val t = toks(i)
             var l = 0
-            while (l < counts.length) {
-              if (counts(l) > maxC) maxC = counts(l)
-              stops += counts(l); l += 1
+            while (l < langsArr.length) {
+              if (stopSets(l).contains(t)) counts(l) += 1
+              l += 1
             }
-            // argmax ties -> first language in Langs order; all-zero
-            // -> unknown (the langId fold's rule)
-            val lang =
-              if (maxC == 0) "unknown"
-              else langsArr(counts.indexWhere(_ == maxC))
-            // one char scan for BOTH regex counts: BpeishPattern
-            // ([a-zA-Z]+|[0-9]|[^a-zA-Z0-9 ]) and the punctuation
-            // class ([^a-zA-Z0-9 ]) are exact ASCII classes
-            var punct = 0
-            var bpeish = 0
-            var ci = 0
-            val n = text.length
-            while (ci < n) {
-              val c = text.charAt(ci)
-              val isL = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
-              if (isL) {
-                bpeish += 1; ci += 1
-                while (ci < n && {
-                  val d = text.charAt(ci)
-                  (d >= 'a' && d <= 'z') || (d >= 'A' && d <= 'Z')
-                }) ci += 1
-              } else {
-                if (c >= '0' && c <= '9') bpeish += 1
-                else if (c != ' ') { bpeish += 1; punct += 1 }
-                ci += 1
-              }
-            }
-            // the exact expression chain of qualityExprs, in the same
-            // association order (length() counts code points)
-            val nChars = text.codePointCount(0, n).toDouble
-            val nTok = toks.length.toDouble
-            val punctRatio = punct.toDouble / nChars
-            val stopRatio = stops.toDouble / nTok
-            val meanTokLen = (nChars - (nTok - 1.0)) / nTok
-            val lengthScore = math.min(nChars / 500.0, 1.0)
-            val quality = 0.4 * lengthScore +
-              0.3 * math.min(stopRatio * 5.0, 1.0) +
-              0.2 * math.min(meanTokLen / 8.0, 1.0) +
-              0.1 * (1.0 - math.min(punctRatio * 10.0, 1.0))
-            Seq(toks.length, bpeish, lang, nChars, nTok, punctRatio,
-              stopRatio, meanTokLen, quality)
+            i += 1
           }
-        Row.fromSeq(r.toSeq ++ sig)
-      }
-    }(Encoders.row(schema))
+          var maxC = 0
+          var stops = 0L
+          var l = 0
+          while (l < counts.length) {
+            if (counts(l) > maxC) maxC = counts(l)
+            stops += counts(l); l += 1
+          }
+          // argmax ties -> first language in Langs order; all-zero
+          // -> unknown (the langId fold's rule)
+          val lang =
+            if (maxC == 0) "unknown"
+            else langsArr(counts.indexWhere(_ == maxC))
+          // one char scan for BOTH regex counts: BpeishPattern
+          // ([a-zA-Z]+|[0-9]|[^a-zA-Z0-9 ]) and the punctuation
+          // class ([^a-zA-Z0-9 ]) are exact ASCII classes
+          var punct = 0
+          var bpeish = 0
+          var ci = 0
+          val n = text.length
+          while (ci < n) {
+            val c = text.charAt(ci)
+            val isL = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
+            if (isL) {
+              bpeish += 1; ci += 1
+              while (ci < n && {
+                val d = text.charAt(ci)
+                (d >= 'a' && d <= 'z') || (d >= 'A' && d <= 'Z')
+              }) ci += 1
+            } else {
+              if (c >= '0' && c <= '9') bpeish += 1
+              else if (c != ' ') { bpeish += 1; punct += 1 }
+              ci += 1
+            }
+          }
+          // the exact expression chain of qualityExprs, in the same
+          // association order (length() counts code points)
+          val nChars = text.codePointCount(0, n).toDouble
+          val nTok = toks.length.toDouble
+          val punctRatio = punct.toDouble / nChars
+          val stopRatio = stops.toDouble / nTok
+          val meanTokLen = (nChars - (nTok - 1.0)) / nTok
+          val lengthScore = math.min(nChars / 500.0, 1.0)
+          val quality = 0.4 * lengthScore +
+            0.3 * math.min(stopRatio * 5.0, 1.0) +
+            0.2 * math.min(meanTokLen / 8.0, 1.0) +
+            0.1 * (1.0 - math.min(punctRatio * 10.0, 1.0))
+          Seq(toks.length, bpeish, lang, nChars, nTok, punctRatio,
+            stopRatio, meanTokLen, quality)
+        }
+    }
   }
 
   /** Content fingerprint: md5 of the whitespace-normalised lowercased
@@ -232,7 +227,7 @@ object TextOps {
     // "reproducible in any engine" contract
     require(k >= 2 && k <= 8 && w >= 1,
       s"need 2 <= k <= 8 (int64 overflow above), w >= 1, got k=$k w=$w")
-    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     // base-131 polynomial over the k chars starting at each position;
     // codes are codepoint % 512, matching the relational
@@ -246,7 +241,7 @@ object TextOps {
       StructField("doc_id", idf.dataType, idf.nullable),
       StructField("fp", LongType, nullable = false)))
     val (kk, ww) = (k, w)
-    in.mapPartitions { it =>
+    graft.core.Kernel.map(in, schema) { it =>
       it.flatMap { r =>
         val text = if (r.isNullAt(1)) null else r.getString(1)
         if (text == null || text.length < kk) Iterator.empty
@@ -283,7 +278,7 @@ object TextOps {
           }
         }
       }
-    }(Encoders.row(schema))
+    }
   }
 
   /** Benchmark decontamination: which corpus documents share local

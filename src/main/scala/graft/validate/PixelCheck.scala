@@ -77,7 +77,7 @@ object PixelCheck {
     * thread-safe: one instance per partition (single-threaded), like
     * any decoder state in the mapPartitions batch shape.
     */
-  final class Codec {
+  final class Codec extends AutoCloseable {
     private val jpegWriter =
       ImageIO.getImageWritersByFormatName("jpeg").next()
     private val pngWriter =

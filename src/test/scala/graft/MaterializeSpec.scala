@@ -132,7 +132,6 @@ class MaterializeSpec extends SparkSpec {
       "SpanDedup.scala" -> "duplicationRatio",
       "SpanDedup.scala" -> "removeDuplicatedSpans",
       "Dedup.scala" -> "containmentPairs",
-      "Flagship.scala" -> "featuresOver",
       "StreamingOps.scala" -> "decontaminateStream",
       "StreamingOps.scala" -> "annEnrichStream")
     val sites = for {
